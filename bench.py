@@ -399,12 +399,10 @@ def bench_reference_corpus(spark, n_docs: int) -> tuple[float, int]:
     # cache_key: evicts the previous corpus's persisted weight table
     # (replacement slot — no accumulation across the 3 corpus sizes);
     # each size runs once so the timing still covers the full build.
-    # broadcast_df_max=None: gene_g0_gene is a known-rare term; the
-    # reference broadcasts its query dict unconditionally too.
     df = term_similarity_pipeline(
         read_text_corpus(spark, path), "gene_g0_gene", k=5,
         prefix="gene_", suffix="_gene",
-        broadcast_df_max=None, cache_key=("gene_corpus", path))
+        cache_key=("gene_corpus", path))
     df.write.format("noop").mode("overwrite").save()
     return time.perf_counter() - t0, n_tokens
 

@@ -37,6 +37,10 @@ class Corpus:
 
     def __init__(self, df: DataFrame):
         self.df = df
+        # Identity of this corpus in the term-index slot: queries on
+        # the same Corpus reuse one persisted index. An object, not
+        # id(self), so a later Corpus can never inherit a stale key.
+        self._cache_key = object()
 
     def tfidf(self) -> DataFrame:
         """(doc_id, term, tfidf) weight table."""
@@ -48,7 +52,8 @@ class Corpus:
         """Top-k terms most similar to ``query`` (the reference's
         whole program, app.py:115-181)."""
         return T.term_similarity_pipeline(
-            self.df, query, k=k, prefix=prefix, suffix=suffix)
+            self.df, query, k=k, prefix=prefix, suffix=suffix,
+            cache_key=self._cache_key)
 
 
 class Engine:

@@ -996,9 +996,8 @@ def cosine_range_search(embeddings: DataFrame, queries: DataFrame,
                         q_count: int | None = None) -> DataFrame:
     """Fixed-radius similarity search — every corpus vector with
     cosine ≥ ``min_cosine`` to each query — with a MEASURED-count
-    gate on the query-block broadcast (the flagship's
-    ``broadcast_df_max`` discipline, operators/text.py
-    similar_terms; r12 verdict #3 closed the ungated form).
+    gate on the query-block broadcast (r12 verdict #3 closed the
+    ungated form).
 
     Under ``broadcast_q_max`` (LIMIT-bounded probe — scans at most
     bound+1 query rows) the query block broadcasts and the search is

@@ -26,16 +26,22 @@ Execution shape vs the reference (SURVEY.md §3.2-3.3): the reference
 crosses the executor→driver boundary three times (collect at
 app.py:11,29,51) and re-parallelizes three times (app.py:17,40,57),
 with groupByKey (no partial agg) shuffles. Here the whole pipeline is
-one Catalyst plan: `explode` replaces the driver tokenize loop, window
+one Catalyst plan: `explode` replaces the driver tokenize loop, grouped
 aggregates replace the per-doc / per-term driver loops (one shuffle
-each, partial+final hash agg for the similarity reduce), the query
-vector is attached with a **broadcast hash join** instead of a
-closure-captured dict (app.py:162), and top-k plans as
-TakeOrderedAndProject (no total sort). At 100 TB: the only shuffles
-are hash-partitioned by doc_id / term; hot (stopword-like) terms in
-the df window are handled by AQE skew split; the query vector is
-provably tiny (≤ N_docs rows, 1 term) so the broadcast never grows
-with vocabulary size.
+each, partial+final hash agg for the similarity reduce), and top-k
+plans as TakeOrderedAndProject (no total sort). The index is built
+once per snapshot as ``term_index``: (doc_id, term, tfidf, norm) rows
+hash-partitioned by doc_id, with each term's L2 norm computed by the
+same aggregation that counts its df. A query then attaches its vector
+(replacing the closure-captured dict at app.py:162) with a
+partition-local shuffled hash join on doc_id — both sides read the
+same doc_id-partitioned cache, so there is no exchange, broadcast or
+size probe below the join, and the one shuffle is the per-term
+reduce. At 100 TB: the only shuffles are hash-partitioned by doc_id /
+term; hot (stopword-like) terms in the df aggregation get map-side
+partial aggregation; a query's hash table holds df(query)/P rows per
+partition, so even a stopword-like query never builds more than one
+partition's documents.
 """
 
 from __future__ import annotations
@@ -87,7 +93,10 @@ def with_doc_frequency(counts: DataFrame) -> DataFrame:
     """Attach per-term document frequency — reference phase 3 map/
     reduce (app.py:43-57). After term_counts each (doc, term) row is
     distinct, so counting rows per term equals the number of
-    documents containing the term. The df table is vocabulary-sized
+    documents containing the term. The same aggregation sums
+    ``tf_sq = Σ_d (tf_count/doc_len)²`` (``counts`` must carry
+    doc_len), so the term's L2 norm needs no second pass:
+    ‖v_t‖ = |idf(t)|·sqrt(tf_sq). The df table is vocabulary-sized
     (orders of magnitude smaller than the corpus) and the join is
     left UNHINTED (r12, the same policy as the tokenizer family's
     vocab joins): AQE broadcasts it under autoBroadcastJoinThreshold
@@ -96,7 +105,9 @@ def with_doc_frequency(counts: DataFrame) -> DataFrame:
     shuffle-joins past broadcast reach, where a hard hint would die
     building a Heaps'-law-sized (10^8-10^9 distinct terms) broadcast
     before the query ran at all."""
-    df_tab = counts.groupBy("term").agg(F.count("*").alias("df"))
+    tf = F.col("tf_count") / F.col("doc_len")
+    df_tab = counts.groupBy("term").agg(
+        F.count("*").alias("df"), F.sum(tf * tf).alias("tf_sq"))
     return counts.join(df_tab, "term")
 
 
@@ -116,10 +127,9 @@ def vocab_join(left: DataFrame, vocab: DataFrame,
     map stages have been paid (measured 1.5-2x on the sf0.1
     encode/pack family, BENCH_TRIAGE r13).
 
-    Resolution: the same measured-probe discipline as the flagship's
-    ``broadcast_df_max`` (``similar_terms``) and the encode strategy
-    gate (``bpe_encode_corpus``): a LIMIT-bounded count — scans at
-    most ``broadcast_vocab_max + 1`` rows of the (checkpointed,
+    Resolution: the same measured-probe discipline as the encode
+    strategy gate (``bpe_encode_corpus``): a LIMIT-bounded count —
+    scans at most ``broadcast_vocab_max + 1`` rows of the (checkpointed,
     materialized) vocab — picks the hinted broadcast under the bound
     and the unhinted AQE-decided join past it. Callers MUST pass a
     localCheckpointed (or otherwise materialized) vocab: on a lazy
@@ -148,26 +158,35 @@ def vocab_join(left: DataFrame, vocab: DataFrame,
     return left.join(vocab, on)
 
 
-def tfidf(corpus: DataFrame) -> DataFrame:
-    """Full TF-IDF pipeline: (doc_id, text) -> (doc_id, term, tfidf).
+def _weights_and_norms(corpus: DataFrame) -> DataFrame:
+    """(doc_id, text) -> (doc_id, term, tfidf, norm), where ``norm``
+    is the term's L2 norm ‖v_t‖ over all documents.
 
-    `tfidf = (tf_count / doc_len) * log10(N / df)` (app.py:58). N is
-    computed in-plan via a broadcast cross-join of a 1-row aggregate —
-    no eager count() job, no driver scalar, works at any scale.
+    `tfidf = (tf_count / doc_len) * log10(N / df)` (app.py:58) and
+    `norm = |log10(N / df)| * sqrt(Σ_d tf²)`, both from the one
+    per-term aggregation in ``with_doc_frequency``. N is computed
+    in-plan via a broadcast cross-join of a 1-row aggregate — no eager
+    count() job, no driver scalar, works at any scale.
     """
     n_docs = corpus.agg(F.count("*").alias("n_docs"))
     scored = with_doc_frequency(with_doc_length(term_counts(tokenize(corpus))))
+    idf = F.log10(F.col("n_docs") / F.col("df"))
     return (
         scored.crossJoin(F.broadcast(n_docs))
         .select(
             "doc_id",
             "term",
-            (
-                (F.col("tf_count") / F.col("doc_len"))
-                * F.log10(F.col("n_docs") / F.col("df"))
-            ).alias("tfidf"),
+            ((F.col("tf_count") / F.col("doc_len")) * idf).alias("tfidf"),
+            (F.abs(idf) * F.sqrt("tf_sq")).alias("norm"),
         )
     )
+
+
+def tfidf(corpus: DataFrame) -> DataFrame:
+    """Full TF-IDF pipeline: (doc_id, text) -> (doc_id, term, tfidf).
+    The unused norm column is pruned from the plan, aggregate
+    included."""
+    return _weights_and_norms(corpus).drop("norm")
 
 
 def filter_term_pattern(weights: DataFrame, prefix: str | None = None,
@@ -183,74 +202,64 @@ def filter_term_pattern(weights: DataFrame, prefix: str | None = None,
     return out
 
 
-def similar_terms(weights: DataFrame, query: str, k: int = 5,
-                  round_to: int | None = None,
-                  broadcast_df_max: int | None = 500_000) -> DataFrame:
-    """Term-term cosine similarity to `query`, top-k.
+def term_index(corpus: DataFrame, prefix: str | None = None,
+               suffix: str | None = None) -> DataFrame:
+    """The query-ready term index: (doc_id, term, tfidf, norm) rows of
+    the terms matching the pattern, hash-partitioned by doc_id.
 
-    Reference app.py:150-178 re-expressed: the query vector is a tiny
-    filtered DataFrame attached by broadcast hash join (replacing the
-    closure-shipped dict at app.py:162); ‖q‖ is a 1-row aggregate also
-    broadcast cross-joined (the reference computes it on the driver at
-    app.py:156 and defers the division to print time, app.py:178 — we
-    fold it into the plan); the per-term reduce is a hash aggregation
+    The partition count is explicit (``spark.sql.shuffle.partitions``)
+    so AQE cannot coalesce the exchange: every query's doc_id join
+    then reads both sides from this one partitioning with no exchange
+    of its own. Persist it once per snapshot and query it many times
+    (``term_similarity_pipeline``)."""
+    n_parts = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return filter_term_pattern(_weights_and_norms(corpus), prefix,
+                               suffix).repartition(n_parts, "doc_id")
+
+
+def similar_terms(index: DataFrame, query: str, k: int = 5,
+                  round_to: int | None = None) -> DataFrame:
+    """Term-term cosine similarity to `query`, top-k, over a
+    ``term_index``.
+
+    Reference app.py:150-178 re-expressed: the query vector (its
+    df(query) rows, each carrying ‖q‖) is inner-joined to the other
+    terms' rows on doc_id — absent (term, doc) entries contribute 0 to
+    the dot product, so only co-occurring rows need to meet. The join
+    is a shuffled hash join building on the query side: the index is
+    already hash-partitioned by doc_id, so it runs partition-local
+    (no exchange, no broadcast, no size probe) and each partition's
+    hash table holds only that partition's share of the query vector,
+    whatever df(query) is. The per-term reduce is a hash aggregation
     (partial+final, same as the reference's one reduceByKey at
-    app.py:166); zero similarities are dropped pre-rounding
+    app.py:166), divided by the stored norms (the reference computes
+    ‖q‖ on the driver at app.py:156 and defers the division to print
+    time, app.py:178); zero similarities are dropped pre-rounding
     (app.py:172) and top-k plans as TakeOrderedAndProject with a term
     tie-break for determinism.
 
     Returns (term string, similarity double). Empty when the query
-    term has no vector (reference would div-by-zero, app.py:178).
-
-    The query vector has df(query) rows — one per document containing
-    the term. For normal queries that is tiny and the broadcast is
-    right; for a stopword-like query on a billion-doc corpus it is
-    O(n_docs) and broadcasting it would OOM the executors (the
-    reference's closure-captured dict at app.py:162 has the identical
-    failure mode). Guard: probe df(query) with a LIMIT-bounded count
-    (``limit(max+1)`` — tasks stop producing past the bound, so the
-    probe never materializes more than max+1 rows even for a stopword
-    query) and fall back to a shuffled hash/merge join on doc_id when
-    it exceeds ``broadcast_df_max`` (default ~8 MB of (doc_id,
-    weight) rows). ``broadcast_df_max=None`` skips the probe and
-    always broadcasts — right when the caller knows the query is
-    rare, e.g. the flagship's fixed mid-frequency term (the round-3
-    unbounded ``qvec.count()`` probe ran a full extra weight-table
-    materialization per call, +443% on the flagship bench).
+    term has no vector or a zero one (the reference would divide by
+    zero, app.py:178).
     """
-    qvec = weights.filter(F.col("term") == query).select(
-        "doc_id", F.col("tfidf").alias("v1"))
-    qnorm = qvec.agg(F.sqrt(F.sum(F.col("v1") * F.col("v1"))).alias("norm_q"))
-
-    cands = weights.filter(F.col("term") != query).select(
-        "doc_id", "term", F.col("tfidf").alias("v2"))
-
-    q_side = qvec
-    if (broadcast_df_max is None
-            or qvec.limit(broadcast_df_max + 1).count() <= broadcast_df_max):
-        q_side = F.broadcast(qvec)
-    joined = cands.join(q_side, "doc_id", "left").select(
-        "term",
-        (F.coalesce(F.col("v1"), F.lit(0.0)) * F.col("v2")).alias("num_part"),
-        (F.col("v2") * F.col("v2")).alias("den2_part"),
-    )
+    qvec = index.filter(F.col("term") == query).select(
+        "doc_id", F.col("tfidf").alias("v1"), F.col("norm").alias("norm_q"))
+    cands = index.filter(F.col("term") != query)
 
     sims = (
-        joined.groupBy("term")
-        .agg(F.sum("num_part").alias("numerator"),
-             F.sum("den2_part").alias("denominator2"))
-        .crossJoin(F.broadcast(qnorm))
-        # norm_q is NULL only when the query vector is empty -> the
-        # inner filter below then sees NULL similarity and drops all
-        # rows (reference crashes on this case; we return empty).
-        # try_divide: divisor 0 (zero-norm query or candidate vector)
-        # -> NULL -> dropped below, instead of ANSI div-by-zero. The
-        # reference crashes on this case (app.py:110,178).
+        cands.join(qvec.hint("shuffle_hash"), "doc_id")
+        .groupBy("term")
+        .agg(F.sum(F.col("v1") * F.col("tfidf")).alias("numerator"),
+             F.max("norm").alias("norm"),
+             F.max("norm_q").alias("norm_q"))
+        # try_divide: a zero norm (idf = 0, i.e. the term is in every
+        # document) -> NULL -> dropped below, instead of ANSI
+        # div-by-zero. The reference crashes on this case
+        # (app.py:110,178).
         .select(
             "term",
             F.try_divide(
-                F.col("numerator"),
-                F.sqrt(F.col("denominator2")) * F.col("norm_q"),
+                F.col("numerator"), F.col("norm") * F.col("norm_q"),
             ).alias("similarity"),
         )
         .filter(F.col("similarity").isNotNull() & (F.col("similarity") != 0))
@@ -748,30 +757,28 @@ def term_similarity_pipeline(corpus: DataFrame, query: str, k: int = 5,
                              prefix: str | None = None,
                              suffix: str | None = None,
                              round_to: int | None = None,
-                             broadcast_df_max: int | None = 500_000,
                              cache_key: Hashable = None) -> DataFrame:
     """End-to-end flagship: corpus -> top-k terms most similar to
     `query` (the reference's whole program, app.py:115-181).
 
-    The tf-idf weight table is persisted: it feeds three consumers
-    (candidates, query vector, query norm) and without persistence
-    Catalyst plans three full corpus passes (6 scans at test scale,
-    verified via explain). The weight table IS the inverted index —
-    materializing it once and querying it many times is the standard
-    shape at scale; the reference likewise computes tf-idf once
-    (app.py:58) before its similarity phase.
+    The ``term_index`` is persisted: it is the inverted index, and
+    both sides of every query's join read it — materializing it once
+    and querying it many times is the standard shape at scale; the
+    reference likewise computes tf-idf once (app.py:58) before its
+    similarity phase. A warm query then runs two Spark jobs: the
+    partition-local join with the partial per-term aggregation, and
+    the final aggregation with the top-k.
 
     The persisted table lives in a single-entry replacement slot
     (operators/cache.py): with a ``cache_key`` identifying the corpus
     snapshot, repeated queries reuse the cached index; without one,
     each call still unpersists its predecessor — never the round-3
     leak of one cache entry per invocation."""
-    weights = keyed_persist(
-        "term_weights",
+    index = keyed_persist(
+        "term_index",
         None if cache_key is None else (cache_key, prefix, suffix),
-        lambda: filter_term_pattern(tfidf(corpus), prefix, suffix))
-    return similar_terms(weights, query, k, round_to=round_to,
-                         broadcast_df_max=broadcast_df_max)
+        lambda: term_index(corpus, prefix, suffix))
+    return similar_terms(index, query, k, round_to=round_to)
 
 
 # ------------------------------------------------------ BPE tokenizer

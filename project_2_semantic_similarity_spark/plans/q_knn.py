@@ -2525,12 +2525,12 @@ def knn_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape (r12 verdict #3): the query-block broadcast is
     GATED on a measured LIMIT-bounded count
-    (operators/similarity.py cosine_range_search — the flagship's
-    broadcast_df_max discipline). Under the bound: one corpus scan,
-    cosine in whole-stage codegen, no shuffle. Past the bound — the
-    query set here scales WITH the corpus (every 100th vec), so at
-    100× the ungated broadcast itself was the bottleneck — the plan
-    switches to the multi-table sign-LSH candidate path
+    (operators/similarity.py cosine_range_search). Under the bound:
+    one corpus scan, cosine in whole-stage codegen, no shuffle. Past
+    the bound — the query set here scales WITH the corpus (every
+    100th vec), so at 100× the ungated broadcast itself was the
+    bottleneck — the plan switches to the multi-table sign-LSH
+    candidate path
     (bucket-local equi-join, exact re-check; declared approximate
     with Charikar-curve recall, the dedup_embedding_cosine_lsh
     contract). Both paths plan-pinned in tests/test_plan_shape.py;

@@ -99,19 +99,11 @@ def flagship_term_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     term-term similarity, top-5. Pattern filter off: the testdata
     vocabulary has no gene_* terms (FIXTURES.md §2).
 
-    ``broadcast_df_max=None`` skips the hot-term probe: this DECLARED
-    query's term and corpus are fixed, and its query vector (df
-    rows of (doc_id, double)) is megabytes at any tested scale — the
-    probe job bought nothing here while costing a full extra
-    weight-table materialization per call (round-3 flagship
-    regression, +443%). The generic ``similar_terms`` surface keeps
-    the bounded probe for unknown terms, which is the right default
-    on an unbounded corpus. ``cache_key``: repeated runs over the
-    same testdata reuse the persisted weight table instead of
-    leaking one copy per call."""
+    ``cache_key``: repeated runs over the same testdata reuse the
+    persisted term index instead of leaking one copy per call."""
     return T.term_similarity_pipeline(
         _corpus(spark, sf_dir), FLAGSHIP_QUERY_TERM, FLAGSHIP_K, round_to=6,
-        broadcast_df_max=None, cache_key=_corpus_key(sf_dir))
+        cache_key=_corpus_key(sf_dir))
 
 
 @query(

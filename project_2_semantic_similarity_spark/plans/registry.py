@@ -130,6 +130,16 @@ _CHANGED_THIS_ROUND = frozenset(
         # v1/v2 snapshot writes submitted concurrently (guide §2.6):
         "scan_snapshot_diff",
         "scan_time_travel",
+        # Query-ready term index: tfidf() computes df and the per-term
+        # squared tf norm in one aggregation, and the flagship queries
+        # a doc_id-partitioned index with per-term norms through a
+        # partition-local shuffled hash join (no probe, no broadcast):
+        "flagship_term_similarity",
+        "text_tfidf",
+        "text_doc_similarity",
+        "text_doc_similarity_ann",
+        "text_keywords",
+        "udaf_pandas",
     }
 )
 # r15 window composition: flagship + 34 r14-debt names above + the

@@ -38,6 +38,31 @@ def test_corpus_from_dataframe(spark):
     assert abs(out2[0].similarity - 1.0) < 1e-9
 
 
+def test_corpus_reuses_its_term_index(spark, tmp_path, monkeypatch):
+    """Queries on one Corpus build its term index once; the answers
+    equal those of a fresh, unkeyed pipeline run."""
+    from project_2_semantic_similarity_spark.operators import text as T
+
+    p = tmp_path / "c.txt"
+    p.write_text(CORPUS)
+    corpus = Engine(spark).corpus(str(p))
+    expected = {
+        q: T.term_similarity_pipeline(corpus.df, q, k=3).collect()
+        for q in ("join", "spark")}
+
+    builds = []
+    build_index = T.term_index
+
+    def counting_term_index(*args, **kwargs):
+        builds.append(args)
+        return build_index(*args, **kwargs)
+
+    monkeypatch.setattr(T, "term_index", counting_term_index)
+    for q in ("join", "spark"):
+        assert corpus.similar_terms(q, k=3).collect() == expected[q]
+    assert len(builds) == 1
+
+
 def test_cli_rejects_bad_k():
     from project_2_semantic_similarity_spark.engine import main
 

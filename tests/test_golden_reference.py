@@ -38,8 +38,10 @@ def gen_corpus(n_docs: int = 120, seed: int = 42) -> list[tuple[str, list[str]]]
     return docs
 
 
-def py_oracle(docs: list[tuple[str, list[str]]], query: str, k: int = 5):
-    """Pure-Python tf-idf cosine top-k per the §2.A contract."""
+def py_oracle(docs: list[tuple[str, list[str]]], query: str, k: int = 5,
+              prefix: str = "gene_", suffix: str = "_gene"):
+    """Pure-Python tf-idf cosine top-k per the §2.A contract; empty
+    ``prefix`` and ``suffix`` turn the pattern filter off."""
     n = len(docs)
     df: Counter = Counter()
     per_doc: dict[str, Counter] = {}
@@ -53,7 +55,7 @@ def py_oracle(docs: list[tuple[str, list[str]]], query: str, k: int = 5):
     for doc_id, c in per_doc.items():
         total = sum(c.values())
         for t, occ in c.items():
-            if not (t.startswith("gene_") and t.endswith("_gene")):
+            if not (t.startswith(prefix) and t.endswith(suffix)):
                 continue
             w = (occ / total) * math.log10(n / df[t])
             vecs.setdefault(t, {})[doc_id] = w

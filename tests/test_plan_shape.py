@@ -39,15 +39,39 @@ def _input_plan(spark, name, sf_dir):
         else jplan
 
 
+def _jnodes(jplan, node_name: str) -> list:
+    """Physical nodes named ``node_name``, pre-order, not descending
+    into InMemoryRelation build plans (see ``_jnode_count``)."""
+    out = [jplan] if jplan.nodeName() == node_name else []
+    ch = jplan.children()
+    for i in range(ch.size()):
+        out += _jnodes(ch.apply(i), node_name)
+    return out
+
+
 def test_flagship_plan_shape(spark, sf_dir):
+    # pin the warm query: once the cached index is materialized its
+    # doc_id partitioning is known to the planner
+    e.queries()["flagship_term_similarity"](spark, sf_dir).collect()
     plan = plan_of(spark, "flagship_term_similarity", sf_dir)
+    # the physical plan with its exchanges, before AQE re-planning
+    jplan = e.queries()["flagship_term_similarity"](
+        spark, sf_dir)._jdf.queryExecution().executedPlan().initialPlan()
     # top-k plans as per-partition heaps, never a total sort
-    assert "TakeOrderedAndProject" in plan
-    # the query-vector attach is a broadcast hash join, not SMJ
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    # the persisted tf-idf weight table serves all three consumers
-    assert plan.count("InMemoryTableScan") >= 3
+    assert _jnode_count(jplan, "TakeOrderedAndProject") == 1
+    # the query vector meets the candidates in a shuffled hash join on
+    # doc_id that reads both sides straight from the doc_id-partitioned
+    # cached index: no exchange, broadcast or sort-merge below it
+    (join,) = _jnodes(jplan, "ShuffledHashJoin")
+    assert "doc_id" in join.leftKeys().toString()
+    assert "doc_id" in join.rightKeys().toString()
+    for name in ("Exchange", "BroadcastExchange", "SortMergeJoin"):
+        assert _jnode_count(join, name) == 0, name
+    assert _jnode_count(join, "InMemoryTableScan") == 2
+    # the one shuffle above the cache is the per-term reduce
+    (exchange,) = _jnodes(jplan, "Exchange")
+    assert "hashpartitioning(term" in exchange.toString()
+    assert _jnode_count(jplan, "BroadcastExchange") == 0
     # corpus scan reads only the two needed columns
     schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
     doc_scans = [s for s in schemas if "text" in s]

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from project_2_semantic_similarity_spark.operators.text import (
     similar_terms,
+    term_index,
     tfidf,
 )
 
@@ -46,14 +47,14 @@ def test_ubiquitous_term_has_zero_tfidf(spark, docs):
     assert all(r.tfidf == 0.0 for r in w if r.term == everywhere)
     # and therefore it can never surface as a similarity candidate
     sims = similar_terms(
-        tfidf(_corpus_df(spark, docs)), VOCAB[1], k=100).collect()
+        term_index(_corpus_df(spark, docs)), VOCAB[1], k=100).collect()
     assert everywhere not in {r.term for r in sims}
 
 
 @_SETTINGS
 @given(docs=corpus_strategy)
 def test_similarity_bounded_by_one(spark, docs):
-    w = tfidf(_corpus_df(spark, docs))
+    w = term_index(_corpus_df(spark, docs))
     sims = similar_terms(w, docs[0][0], k=100).collect()
     assert all(r.similarity <= 1.0 + 1e-9 for r in sims)
 
@@ -73,10 +74,10 @@ def test_document_order_irrelevant(spark, docs, seed):
     df2 = spark.createDataFrame(perm, ["doc_id", "text"])
     q = docs[0][0]
     r1 = [(r.term, round(r.similarity, 9))
-          for r in similar_terms(tfidf(df1), q, k=50)
+          for r in similar_terms(term_index(df1), q, k=50)
           .orderBy("term").collect()]
     r2 = [(r.term, round(r.similarity, 9))
-          for r in similar_terms(tfidf(df2), q, k=50)
+          for r in similar_terms(term_index(df2), q, k=50)
           .orderBy("term").collect()]
     assert r1 == r2
 

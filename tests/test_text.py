@@ -208,27 +208,65 @@ def test_doc_similarity_ann_recall_vs_exact(spark, sf_dir):
     assert sparse == ann
 
 
-def test_broadcast_guard_falls_back_for_hot_query(spark):
+def test_hot_query_matches_oracle_without_broadcast(spark):
     """A stopword-like query term (df = n_docs - 1 here; df = n_docs
-    would make idf and hence the whole query vector zero) must not be
-    broadcast when df(query) exceeds the guard threshold — the join
-    degrades to a shuffled join with identical results."""
+    would make idf and hence the whole query vector zero) is answered
+    exactly, and its O(df) query vector is never broadcast: it joins
+    the doc_id-partitioned index partition by partition."""
+    from test_golden_reference import py_oracle
+    from test_plan_shape import _jnode_count
+
     rows = [(f"d{i}", f"common t{i} t{i+1}") for i in range(5)]
     rows.append(("d5", "t5 t6"))
-    corpus = spark.createDataFrame(rows, ["doc_id", "text"])
-    w = T.tfidf(corpus).persist()
-    hinted = T.similar_terms(w, "common", k=50, broadcast_df_max=None)
-    guarded = T.similar_terms(w, "common", k=50, broadcast_df_max=2)
-    plan_h = hinted._jdf.queryExecution().executedPlan().toString()
-    plan_g = guarded._jdf.queryExecution().executedPlan().toString()
-    # hinted path: the qvec attach is a broadcast hash join
-    assert "BroadcastHashJoin" in plan_h
-    # guarded path: no broadcast of the O(n_docs) query vector —
-    # Spark plans the doc_id join as a sort-merge/shuffled-hash join
-    assert ("SortMergeJoin" in plan_g or "ShuffledHashJoin" in plan_g)
-    got_h = {(r.term, round(r.similarity, 9)) for r in hinted.collect()}
-    got_g = {(r.term, round(r.similarity, 9)) for r in guarded.collect()}
-    assert got_g == got_h and len(got_g) > 0
+    index = T.term_index(
+        spark.createDataFrame(rows, ["doc_id", "text"])).persist()
+    try:
+        index.count()  # build the cache
+        out = T.similar_terms(index, "common", k=50)
+        # the physical plan with its exchanges, before AQE re-planning
+        jplan = out._jdf.queryExecution().executedPlan().initialPlan()
+        assert _jnode_count(jplan, "ShuffledHashJoin") == 1
+        assert _jnode_count(jplan, "BroadcastExchange") == 0
+        got = [(r.term, r.similarity) for r in out.collect()]
+    finally:
+        index.unpersist()
+    want = py_oracle([(d, text.split()) for d, text in rows], "common",
+                     k=50, prefix="", suffix="")
+    assert [t for t, _ in got] == [t for t, _ in want] and want
+    for (_, g), (_, w) in zip(got, want):
+        assert g == pytest.approx(w, abs=1e-12)
+
+
+def test_warm_term_query_runs_two_jobs(spark):
+    """A warm query on a persisted term index is two Spark jobs (the
+    partition-local join with the partial per-term aggregation, then
+    the final aggregation with the top-k), and an absent query term
+    returns [] in no more: no size probe, no broadcast jobs."""
+    sc = spark.sparkContext
+    rows = [(f"d{i}", f"t{i % 7} t{i % 5} t{i % 3} common")
+            for i in range(40)] + [("d40", "t1 t2")]
+    index = T.term_index(
+        spark.createDataFrame(rows, ["doc_id", "text"])).persist()
+
+    def jobs_of(query):
+        group = f"warm-term-query-{query}"
+        sc.setJobGroup(group, "term query job count")
+        try:
+            got = T.similar_terms(index, query, k=5).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        return got, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    try:
+        index.count()  # build the cache
+        jobs_of("t1")  # first execution of the plan shape
+        got, n_jobs = jobs_of("t2")
+        assert got and n_jobs == 2
+        absent, n_absent = jobs_of("nosuchterm")
+        assert absent == [] and n_absent <= n_jobs
+    finally:
+        index.unpersist()
 
 
 def test_bpe_arrow_applier_twin_of_fold(spark):

@@ -17,7 +17,7 @@ Special stage names beyond registry queries:
   flagship_probe  — the full TF-IDF term-similarity pipeline on a
                     term that EXISTS in the hashed probe vocabulary
                     ('bcde' ≈ df n/208), via the generic
-                    similar_terms surface with the bounded df probe.
+                    similar_terms surface over the term index.
 
 The probe session runs with the Spark UI enabled and reports, per
 stage: wall, rows, total shuffle-write delta, and the single largest
@@ -102,8 +102,8 @@ def generate_embeddings(spark, n: int, out_dir: str,
 def flagship_probe(spark, out_dir: str):
     """The reference's whole pipeline at probe scale, on a term that
     exists in the hashed vocabulary (h=1234 -> 'bcde'), through the
-    generic guarded surface (bounded df probe + dense/sparse vocab
-    strategy selection)."""
+    generic surface (doc_id-partitioned term index + partition-local
+    query join)."""
     from project_2_semantic_similarity_spark.operators import text as T
 
     corpus = (spark.read.parquet(f"{out_dir}/documents.parquet")
