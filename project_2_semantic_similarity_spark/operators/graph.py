@@ -20,8 +20,8 @@ round is one shuffle: an equi-join of the label relation with the
 edge relation on the node key followed by a min-aggregate — both
 hash-partitioned on node id, no skew beyond a cluster's degree.
 Between rounds the label relation is persisted and the previous one
-released, truncating lineage exactly like kmeans_train
-(operators/similarity.py) so round N does not replay rounds 1..N-1.
+released, truncating lineage so round N does not replay rounds
+1..N-1.
 Convergence is one count-aggregate per round over the rows whose
 label changed — type-agnostic (string or numeric node ids), one
 scalar driver action, never a data-sized collect."""

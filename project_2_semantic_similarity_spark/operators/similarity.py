@@ -25,6 +25,7 @@ from project_2_semantic_similarity_spark.functions import (
     l2_norm,
 )
 from project_2_semantic_similarity_spark.operators.cache import keyed_persist
+from project_2_semantic_similarity_spark.session import local_frame
 
 
 def knn_brute_force(embeddings: DataFrame, query_vec_id: int, k: int,
@@ -124,8 +125,10 @@ def label_centroids(embeddings: DataFrame, label_col: str = "label",
                     vec_col: str = "embedding") -> DataFrame:
     """Element-wise mean vector per label: posexplode → per-(label,
     position) average → re-assemble ordered array. Two shuffles,
-    both on small keys; at scale this is the classic 'explode is
-    fine when the reduction is massive' pattern."""
+    both on small keys. It is the codebook of ``knn_ivf`` and the
+    label-centroid consumers; the k-means fit does not use it (its
+    Lloyd step sums per-task partials instead, see ``_kmeans_fit``),
+    because the exploded shuffle is n×dim rows per call."""
     exploded = embeddings.select(
         label_col, F.posexplode(vec_col).alias("pos", "val"))
     by_pos = exploded.groupBy(label_col, "pos").agg(
@@ -203,6 +206,47 @@ def ivf_assign(embeddings: DataFrame, centroids: DataFrame,
     return out if with_score else out.drop("ccos")
 
 
+def _unit_rows(m):
+    """Rows of the matrix ``m`` scaled to unit L2 norm; zero-norm rows
+    stay zero."""
+    import numpy as np
+
+    nrm = np.linalg.norm(m, axis=1, keepdims=True)
+    return np.divide(m, nrm, out=np.zeros_like(m), where=nrm > 0)
+
+
+def _unit_codebook(rows):
+    """(labels, unit centroid matrix) from (label, centroid) pairs,
+    sorted by label — the row order ``_nearest_centroid``'s tie rule
+    relies on."""
+    import numpy as np
+
+    rows = sorted((int(lbl), [float(x) for x in v]) for lbl, v in rows)
+    labels = np.array([lbl for lbl, _ in rows], dtype=np.int64)
+    return labels, _unit_rows(np.array([v for _, v in rows],
+                                       dtype=np.float64))
+
+
+def _vectors(col):
+    """An Arrow batch's array column as an n×dim float64 matrix."""
+    import numpy as np
+
+    return np.array([np.asarray(v, dtype=np.float64) for v in col])
+
+
+def _nearest_centroid(x, cn):
+    """The assignment kernel: for each row of ``x``, the row index of
+    its max-cosine centroid in the unit codebook ``cn`` and that
+    cosine. ``np.argmax`` takes the FIRST maximum and ``cn`` is sorted
+    by label, so ties break to the lowest label; a zero-norm vector
+    scores 0.0 against every centroid."""
+    import numpy as np
+
+    scores = _unit_rows(x) @ cn.T
+    best = np.argmax(scores, axis=1)
+    return best, scores[np.arange(len(best)), best]
+
+
 def ivf_assign_gemm(embeddings: DataFrame, centroids: DataFrame,
                     id_col: str = "vec_id",
                     vec_col: str = "embedding",
@@ -228,15 +272,8 @@ def ivf_assign_gemm(embeddings: DataFrame, centroids: DataFrame,
     Zero-norm vectors score 0.0 against every centroid (→ lowest
     label, ccos 0.0); they can never appear in a result pair anyway
     (their pair cosine is NULL/masked in every consumer)."""
-    import numpy as np
-
-    rows = sorted((int(r["label"]), [float(x) for x in r["centroid"]])
-                  for r in centroids.collect())
-    labels = np.array([lbl for lbl, _ in rows], dtype=np.int64)
-    cmat = np.array([v for _, v in rows], dtype=np.float64)
-    cnorm = np.linalg.norm(cmat, axis=1, keepdims=True)
-    cn = np.divide(cmat, cnorm, out=np.zeros_like(cmat),
-                   where=cnorm > 0)
+    labels, cn = _unit_codebook(
+        (r["label"], r["centroid"]) for r in centroids.collect())
 
     dtypes = dict(embeddings.dtypes)
     out_schema = (f"{id_col} {dtypes[id_col]}, "
@@ -249,18 +286,12 @@ def ivf_assign_gemm(embeddings: DataFrame, centroids: DataFrame,
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = np.array([np.asarray(v, dtype=np.float64)
-                          for v in pdf[vec_col]])
-            xnorm = np.linalg.norm(x, axis=1, keepdims=True)
-            xn = np.divide(x, xnorm, out=np.zeros_like(x),
-                           where=xnorm > 0)
-            scores = xn @ cn.T
-            best = np.argmax(scores, axis=1)
+            best, ccos = _nearest_centroid(_vectors(pdf[vec_col]), cn)
             yield pd.DataFrame({
                 id_col: pdf[id_col].values,
                 vec_col: pdf[vec_col].values,
                 "list_id": labels[best].astype("int32"),
-                "ccos": scores[np.arange(len(best)), best],
+                "ccos": ccos,
             })
 
     out = _spread(embeddings.select(id_col, vec_col)).mapInPandas(
@@ -343,13 +374,14 @@ def _codebook_key(centroids: DataFrame) -> int:
     key that caches a centroid ASSIGNMENT (ADVICE r4: a
     caller-supplied cache_key identifies the embeddings table only —
     a second call with the same table but a different codebook must
-    not reuse the stale assignment). Codebooks are k driver-local
-    rows by construction, so the collect is bounded — but it IS a
-    Spark job per call, so callers that already hold a durable
-    identity for their codebook (the /tmp-artifact key of a trained
-    codebook, the source fingerprint behind label centroids) should
-    pass it as ``codebook_key`` and skip this probe on the warm
-    path."""
+    not reuse the stale assignment). Codebooks are k rows by
+    construction, so the collect is bounded. A driver-built codebook
+    (``kmeans_codebook``, a trained-codebook artifact) is a
+    LocalRelation and collects with no Spark job; a computed one
+    (``label_centroids``) runs its aggregate per call, so callers
+    that already hold a durable identity for it (the source
+    fingerprint behind label centroids) should pass it as
+    ``codebook_key`` and skip this probe on the warm path."""
     rows = sorted((int(r[0]), tuple(float(x) for x in r[1]))
                   for r in centroids.select("label", "centroid").collect())
     return hash(tuple(rows))
@@ -426,11 +458,12 @@ def _angle(cos_col) -> "F.Column":
 # (the _SLOT_STATS discipline): the K-row radii aggregate and the
 # K×K triangle-inequality screen are recomputed identically on every
 # execution of a blocked-pair plan, but as Catalyst operators they
-# cost an Exchange + two broadcasts + a crossJoin PER RUN (12 jobs/
-# execution measured on dedup_embedding_cosine at r14). K ≈ √n by
+# cost an Exchange + two broadcasts + a crossJoin PER RUN. K ≈ √n by
 # the codebook sizing, so the whole screen is a trivially-small
-# driver computation: one agg job on first sight of the key, a dict
-# hit afterwards. Entries are lists of int pairs, bounded by K².
+# driver computation: one radii agg job on first sight of the key
+# (the codebook collect is free when it is a LocalRelation), a dict
+# hit afterwards; the pairs re-enter the plan as a LocalRelation.
+# Entries are lists of int pairs, bounded by K².
 _CAND_CACHE: dict[tuple, list[tuple[int, int]]] = {}
 
 
@@ -440,10 +473,12 @@ def _bounded_put(cache: dict, key, val, cap: int = 16) -> None:
     vectors), but keys fold in snapshot fingerprints and session
     ids, so a long-lived process iterating over corpora would
     accumulate unboundedly — the round-3 leak class. FIFO-evict the
-    oldest insertion past ``cap`` (dicts preserve insertion order);
-    any evicted entry is just re-derived by one probe job."""
-    while len(cache) >= cap:
-        cache.pop(next(iter(cache)))
+    oldest insertion past ``cap`` (dicts preserve insertion order)
+    when ``key`` is new; overwriting a present key evicts nothing.
+    Any evicted entry is just re-derived by one probe job."""
+    if key not in cache:
+        while len(cache) >= cap:
+            cache.pop(next(iter(cache)))
     cache[key] = val
 
 
@@ -488,7 +523,7 @@ def _candidate_pairs_local(assigned: DataFrame, centroids: DataFrame,
                  for i, j in zip(ia, ib)]
         if full_key is not None:
             _bounded_put(_CAND_CACHE, memo_key, pairs)
-    return spark.createDataFrame(pairs, "c1 int, c2 int")
+    return local_frame(spark, pairs, "c1 int, c2 int")
 
 
 def candidate_cluster_pairs(assigned: DataFrame, centroids: DataFrame,
@@ -1093,23 +1128,24 @@ def kmeans_train(embeddings: DataFrame, k: int = 8, iters: int = 5,
     the iterative-algorithm surface (the codebook trainer whose
     output knn_ivf / cosine_pairs_blocked consume).
 
-    Each iteration is the textbook two-step expressed as DataFrame
-    ops: (1) assign every vector to its max-cosine centroid via the
-    broadcast-codebook argmax (``ivf_assign`` — one scan, no sort);
-    (2) recompute element-wise mean centroids (``label_centroids`` —
-    posexplode + per-(label, pos) partial+final avg). Between
-    iterations the k×dim codebook is collected to the driver and
-    re-broadcast — k rows, bounded, and it truncates the lineage so
-    iteration N's plan does not replay iterations 1..N-1 (the
-    standard Spark iterative-algorithm pattern; at 100 TB the
-    assignment pass is the only data-sized job and it is linear per
-    iteration).
+    The fit (``_kmeans_fit``) runs each Lloyd iteration as ONE Spark
+    job over the persisted vectors: every task assigns its rows to
+    their max-cosine centroid (``_nearest_centroid``, the kernel
+    ``ivf_assign_gemm`` uses; the k×dim codebook ships in the closure) and emits at most k
+    per-label (count, vector sum) partials; the driver adds them and
+    divides. Per iteration the driver receives at most tasks×k×dim
+    partial sums, whatever n is, and the codebook never re-enters
+    Spark between iterations (the standard Spark iterative-algorithm
+    pattern without the lineage: iteration N's job does not replay
+    iterations 1..N-1). At 100 TB the assignment pass is the only
+    data-sized work and it is linear per iteration.
 
     Everything is deterministic by construction: init picks the k
     vectors with the lowest (md5(id), id) — a seeded pseudo-random
     draw with a total-order tie-break — and the argmax breaks
-    centroid ties by lowest label (ivf_assign). No RNG, no
-    partition-order dependence beyond float-sum associativity.
+    centroid ties by lowest label. A label no vector chose drops out;
+    the others keep their ids. No RNG, no partition-order dependence
+    beyond float-sum associativity.
 
     Returns (id, list_id, ccos): final assignment plus the winning
     cosine. Declared rows-only downstream — a 5-deep iterative CTE
@@ -1117,11 +1153,10 @@ def kmeans_train(embeddings: DataFrame, k: int = 8, iters: int = 5,
     are pinned in tests/test_dedup_knn.py.
 
     ``cache_key`` (source fingerprint): the Lloyd fit is an EAGER
-    driver loop (~2 jobs × iters at plan-construction time), fully
-    determined by (source, k, iters) — with a key it runs once per
-    session via keyed_value (the r13-verdict-#6 probe-memoization
-    discipline: the bench's cold pass still pays it; warm passes
-    measure steady state).
+    driver loop (iters + a constant number of jobs at
+    plan-construction time), fully determined by (source, k, iters) —
+    with a key it runs once per session via keyed_value (the bench's
+    cold pass still pays it; warm passes measure steady state).
     """
     from project_2_semantic_similarity_spark.operators.cache import (
         keyed_value)
@@ -1134,7 +1169,7 @@ def kmeans_train(embeddings: DataFrame, k: int = 8, iters: int = 5,
             lambda: _kmeans_fit(embeddings, k, iters, id_col, vec_col))
     else:
         cent_rows = _kmeans_fit(embeddings, k, iters, id_col, vec_col)
-    cents = spark.createDataFrame(cent_rows, _CODEBOOK_SCHEMA)
+    cents = local_frame(spark, cent_rows, _CODEBOOK_SCHEMA)
     return ivf_assign_gemm(embeddings.select(id_col, vec_col), cents,
                            id_col, vec_col, with_score=True).select(
         id_col, "list_id", F.round("ccos", 6).alias("ccos"))
@@ -1150,8 +1185,8 @@ def kmeans_codebook(embeddings: DataFrame, k: int = 8, iters: int = 5,
                     cache_key: Hashable = None) -> DataFrame:
     """The TRAINED centroids themselves, ``(label, centroid)`` — the
     codebook ``knn_ivf`` / ``cosine_pairs_blocked`` consume. The
-    returned DataFrame is built from k driver-local rows —
-    broadcasting it is free.
+    returned DataFrame is a LocalRelation over k driver-held rows —
+    collecting or broadcasting it runs no job.
 
     ``fit_sample_max``: fit on a deterministic hash-sample of at most
     ~this many vectors (the standard IVF practice — codebook quality
@@ -1191,38 +1226,61 @@ def kmeans_codebook(embeddings: DataFrame, k: int = 8, iters: int = 5,
             (cache_key, id_col, vec_col), fit_rows)
     else:
         rows = fit_rows()
-    return spark.createDataFrame(rows, _CODEBOOK_SCHEMA)
+    return local_frame(spark, rows, _CODEBOOK_SCHEMA)
 
 
 def _kmeans_fit(embeddings: DataFrame, k: int, iters: int,
                 id_col: str, vec_col: str) -> list[tuple]:
     """Lloyd iterations (spherical, deterministic); returns the final
-    k (label, centroid) rows. Per-iteration driver traffic is the
-    k×dim codebook only; the persisted base is released in finally."""
-    spark = embeddings.sparkSession
-    init = (
-        embeddings
-        .select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(k)
-        .collect()
-    )
-    cent_rows = [(i, [float(x) for x in r[vec_col]])
-                 for i, r in enumerate(init)]
-    cents = spark.createDataFrame(cent_rows, _CODEBOOK_SCHEMA)
+    (label, centroid) rows, label ascending. The vectors are spread
+    and persisted once; the init collect materializes them, then each
+    iteration is one ``mapInPandas`` job whose tasks return at most k
+    ``(label, n, s)`` rows — member count and raw vector sum — and the
+    driver's new centroid is Σs / Σn, the raw mean of the members.
+    The persisted base is released in finally."""
+    import numpy as np
 
-    base = embeddings.select(id_col, vec_col).persist()
-    base.count()  # materialize once; every iteration rescans the cache
+    base = _spread(embeddings.select(id_col, vec_col), id_col).persist()
     try:
+        init = (base.orderBy(F.md5(F.col(id_col).cast("string")),
+                             F.col(id_col))
+                .limit(k).select(vec_col).collect())
+        cent_rows = [(i, [float(x) for x in r[0]])
+                     for i, r in enumerate(init)]
+        vecs = base.select(vec_col)
         for _ in range(iters):
-            assigned = ivf_assign_gemm(base, cents, id_col, vec_col)
-            new_cents = label_centroids(
-                assigned.withColumnRenamed("list_id", "label"),
-                "label", vec_col)
-            cent_rows = [(int(r["label"]),
-                          [float(x) for x in r["centroid"]])
-                         for r in new_cents.collect()]
-            cents = spark.createDataFrame(cent_rows, _CODEBOOK_SCHEMA)
+            labels, cn = _unit_codebook(cent_rows)
+
+            def partials(batches, labels=labels, cn=cn):
+                import pandas as pd
+
+                sums = np.zeros(cn.shape)
+                counts = np.zeros(len(labels), dtype=np.int64)
+                for pdf in batches:
+                    if not len(pdf):
+                        continue
+                    x = _vectors(pdf[vec_col])
+                    best, _ = _nearest_centroid(x, cn)
+                    np.add.at(sums, best, x)
+                    counts += np.bincount(best, minlength=len(labels))
+                hit = np.flatnonzero(counts)
+                if len(hit):
+                    yield pd.DataFrame({
+                        "label": labels[hit].astype("int32"),
+                        "n": counts[hit],
+                        "s": list(sums[hit]),
+                    })
+
+            count, total = {}, {}
+            for r in vecs.mapInPandas(
+                    partials,
+                    schema="label int, n long, s array<double>").collect():
+                lbl = int(r["label"])
+                count[lbl] = count.get(lbl, 0) + int(r["n"])
+                total[lbl] = total.get(lbl, 0.0) + np.asarray(
+                    r["s"], dtype=np.float64)
+            cent_rows = [(lbl, (total[lbl] / count[lbl]).tolist())
+                         for lbl in sorted(count)]
         return cent_rows
     finally:
         base.unpersist()
@@ -1311,7 +1369,8 @@ def pq_knn(embeddings: DataFrame, query_vec_id: int, k: int,
                  .limit(k_sub).select("uv").collect()]
         if seed_key is not None:
             _bounded_put(_PQ_SEED_CACHE, seed_key, seeds)
-    subcents = spark.createDataFrame(
+    subcents = local_frame(
+        spark,
         [(m, c, seeds[c][m * sub_dim:(m + 1) * sub_dim])
          for m in range(m_sub) for c in range(len(seeds))],
         "m int, code int, cv array<double>")

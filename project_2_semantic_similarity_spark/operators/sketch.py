@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from project_2_semantic_similarity_spark.operators.dedup import (
     portable_hash60)
+from project_2_semantic_similarity_spark.session import local_frame
 
 
 def _hll_alpha(m: int) -> float:
@@ -152,7 +153,7 @@ def histogram_quantiles(df: DataFrame, col: str,
             Window.orderBy("b")
             .rowsBetween(Window.unboundedPreceding, 0)).alias("cum"))
     qs = [(float(q),) for q in quantiles]
-    qdf = df.sparkSession.createDataFrame(qs, "quantile double")
+    qdf = local_frame(df.sparkSession, qs, "quantile double")
     picked = (
         cum.crossJoin(F.broadcast(qdf))
         .filter(F.col("cum") >= F.ceil(F.col("quantile") * F.col("n")))

@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from project_2_semantic_similarity_spark.operators.cache import keyed_persist
+from project_2_semantic_similarity_spark.session import local_frame
 
 TOKEN_SPLIT = r"\s+"
 
@@ -300,7 +301,8 @@ def _docsim_dense_block_gemm(vecs: DataFrame, k: int,
         .agg(F.collect_list(
             F.struct("doc_id", "vec", "norm")).alias("b"))
     )
-    pair_idx = spark.createDataFrame(
+    pair_idx = local_frame(
+        spark,
         [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
         "i long, j long")
     paired = (
@@ -1408,7 +1410,7 @@ def byte_bpe_ids(spark, merges: list[tuple[str, str]] | None = None,
     rows = [(table[b], n_specials + b) for b in range(256)]
     rows += [(a + b, n_specials + 256 + r)
              for r, (a, b) in enumerate(ms)]
-    return spark.createDataFrame(rows, "token string, token_id long")
+    return local_frame(spark, rows, "token string, token_id long")
 
 
 def byte_unicode_docs_marked(docs: DataFrame,

@@ -18,6 +18,7 @@ from project_2_semantic_similarity_spark.operators import dedup as D
 from project_2_semantic_similarity_spark.operators.cache import keyed_persist
 from project_2_semantic_similarity_spark.plans.registry import query
 from project_2_semantic_similarity_spark.scratch import scratch_path
+from project_2_semantic_similarity_spark.session import local_frame
 from project_2_semantic_similarity_spark.sources import load_table
 
 _SHINGLE_N = 3
@@ -470,13 +471,16 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The propagation result is a localCheckpoint-materialized DataFrame
 # (lineage-free, executor-resident); cache it per corpus fingerprint
 # so dedup_clusters and dedup_transitive_keep don't each re-run the
-# iterative loop.
+# iterative loop. FIFO-bounded like the other module memos: every
+# fresh snapshot adds a key.
 _CLUSTERS_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _jaccard_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from project_2_semantic_similarity_spark.operators.graph import (
         dedup_clusters as clusters_op)
+    from project_2_semantic_similarity_spark.operators.similarity import (
+        _bounded_put)
 
     # applicationId in the key: a localCheckpoint-backed DataFrame is
     # executor-resident state of ONE session — a recreated session in
@@ -488,7 +492,7 @@ def _jaccard_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = D.jaccard_pairs(_corpus_shingles(spark, sf_dir),
                                 _JACCARD_MIN)
         df = clusters_op(pairs)
-        _CLUSTERS_CACHE[key] = df
+        _bounded_put(_CLUSTERS_CACHE, key, df)
     return df
 
 
@@ -885,7 +889,7 @@ def _trained_codebook(spark: SparkSession, sf_dir: str,
             import _bounded_put
         _bounded_put(_CODEBOOK_CACHE, key, hit)
     k, rows = hit
-    return spark.createDataFrame(rows, _CODEBOOK_SCHEMA), k
+    return local_frame(spark, rows, _CODEBOOK_SCHEMA), k
 
 
 @query(

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from project_2_semantic_similarity_spark.functions import l2_norm
 from project_2_semantic_similarity_spark.operators import similarity as S
 from project_2_semantic_similarity_spark.plans.registry import query
+from project_2_semantic_similarity_spark.session import local_frame
 from project_2_semantic_similarity_spark.sources import load_table
 
 _QUERY_VEC_ID = 0
@@ -840,8 +841,9 @@ FROM (
 def cluster_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic spherical k-means (k=8, 5 iterations) over the
     embeddings — the iterative codebook trainer feeding knn_ivf's
-    inverted lists (operators/similarity.py kmeans_train: broadcast
-    assign + mean recompute per iteration, driver-truncated lineage).
+    inverted lists (operators/similarity.py kmeans_train: one Spark
+    job per iteration, whose tasks assign their vectors and return
+    per-label partial sums the driver turns into the new means).
 
     Fully oracle-verified (upgraded from rows-only in r5): the init
     is a seeded md5 draw and every step is deterministic, so the
@@ -1837,17 +1839,14 @@ def dedup_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         (sf_dir, source_fingerprint(sf_dir, "documents"), bound),
         lambda: docs.limit(bound + 1).count())
     if n_docs <= bound:
-        import pandas as pd
-
         rows = hashes.toPandas()
         doc_id, comp, size = hamming_components_np(
             rows["doc_id"].to_numpy(), rows["simhash"].to_numpy(),
             max_hamming=3)
-        return spark.createDataFrame(
-            pd.DataFrame({"doc_id": doc_id, "component_id": comp,
-                          "component_size": size}),
-            schema="doc_id bigint, component_id bigint, "
-                   "component_size bigint")
+        return local_frame(
+            spark,
+            list(zip(doc_id.tolist(), comp.tolist(), size.tolist())),
+            "doc_id bigint, component_id bigint, component_size bigint")
     pairs = simhash_near_pairs(hashes, max_hamming=3, bits=56)
     return clusters_op(pairs.select("doc_a", "doc_b"))
 
@@ -2733,8 +2732,8 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the Rayleigh quotient is off-grid too — same shared rule
     lam = float(quant(np.array([float(v @ cov @ v)]))[0])
     rows = [(int(i), round(float(v[i]), 6), lam) for i in range(dim)]
-    return spark.createDataFrame(
-        rows, "dim_idx long, loading double, eigenvalue double")
+    return local_frame(
+        spark, rows, "dim_idx long, loading double, eigenvalue double")
 
 
 @query(

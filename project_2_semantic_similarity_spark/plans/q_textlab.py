@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from project_2_semantic_similarity_spark.functions import text_analysis as TA
 from project_2_semantic_similarity_spark.operators.text import vocab_join
 from project_2_semantic_similarity_spark.plans.registry import query
+from project_2_semantic_similarity_spark.session import local_frame
 from project_2_semantic_similarity_spark.sources import load_table
 
 
@@ -1743,9 +1744,9 @@ def text_bpe_train_batched(spark: SparkSession,
         for a, b, cnt in rnd:
             rank += 1
             rows.append((rank, a, b, cnt))
-    return spark.createDataFrame(
-        rows, "rank long, left_sym string, right_sym string, "
-              "pair_cnt long")
+    return local_frame(
+        spark, rows, "rank long, left_sym string, right_sym string, "
+                     "pair_cnt long")
 
 
 @query(
@@ -1810,11 +1811,10 @@ def text_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     real = ranked.select(
         "token", (F.col("rn") + 3).cast("long").alias("token_id"),
         F.col("freq").cast("long").alias("freq"))
-    specials = spark.createDataFrame(
-        [("<pad>", 0), ("<unk>", 1), ("<bos>", 2), ("<eos>", 3)],
-        ["token", "token_id"]).select(
-        "token", F.col("token_id").cast("long"),
-        F.lit(0).cast("long").alias("freq"))
+    specials = local_frame(
+        spark, [("<pad>", 0), ("<unk>", 1), ("<bos>", 2), ("<eos>", 3)],
+        "token string, token_id long").select(
+        "token", "token_id", F.lit(0).cast("long").alias("freq"))
     return real.unionAll(specials)
 
 
@@ -1996,9 +1996,8 @@ def text_bpe_vocab_coverage(spark: SparkSession,
     ranked = with_global_rank(
         freq, [F.col("freq").desc(), F.col("token").asc()],
         rank_col="rn")
-    sizes = spark.createDataFrame(
-        [(k,) for k in _VOCAB_CURVE_SIZES], ["vocab_size"]) \
-        .select(F.col("vocab_size").cast("long").alias("vocab_size"))
+    sizes = local_frame(spark, [(k,) for k in _VOCAB_CURVE_SIZES],
+                        "vocab_size long")
     tot = freq.agg(F.sum("freq").cast("long").alias("total"))
     return (ranked.crossJoin(F.broadcast(sizes))
             .groupBy("vocab_size")
@@ -3209,7 +3208,8 @@ def text_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     ff = (wf.join(seg2, "word")
           .select("wf", F.explode("tokens").alias("piece"))
           .groupBy("piece").agg(F.sum("wf").alias("f")))
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [(p, ic, costs2[p]) for p, _fs, ic in kept_pairs],
         "piece string, is_char int, cost_micro_nats long")
     # VOCAB_K-bounded relation: the global window is over ≤ K + |alphabet|

@@ -140,6 +140,23 @@ _CHANGED_THIS_ROUND = frozenset(
         "text_doc_similarity_ann",
         "text_keywords",
         "udaf_pandas",
+        # Driver-built rows enter plans as LocalRelations
+        # (session.local_frame), the k-means fit runs one partial-sum
+        # job per Lloyd iteration through the shared assignment
+        # kernel, and the module memos evict only on a new key. Also
+        # reached, and listed above: cluster_kmeans{,_1iter},
+        # dedup_embedding_cosine{,_fold}, knn_batch_topk,
+        # dedup_clusters, dedup_transitive_keep, dedup_phash_clusters,
+        # text_doc_similarity, text_bpe_vocab{,_coverage},
+        # text_bpe_decode, text_unigram_train.
+        "agg_quantile_hist",
+        "dedup_semdedup",
+        "embedding_pca_power",
+        "knn_ivf_pq",
+        "knn_ivf_trained",
+        "knn_pq",
+        "text_bpe_encode_bytes",
+        "text_bpe_train_batched",
     }
 )
 # r15 window composition: flagship + 34 r14-debt names above + the

@@ -5,13 +5,17 @@ on a real cluster every setting here except the master is still the
 right default: AQE on (runtime coalesce + skew-join split), UTC session
 timezone (oracle parity with DuckDB), Arrow enabled for the Pandas-UDF
 operators.
+
+``local_frame`` is how driver-held rows (codebooks, id tables, small
+driver-computed results) become relations: as LocalRelations, never
+through ``sc.parallelize``.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "project2_semantic_similarity",
@@ -55,3 +59,31 @@ def get_spark(app_name: str = "project2_semantic_similarity",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """DataFrame over driver-held ``rows`` (a sequence of tuples, in
+    ``schema``'s column order; ``schema`` is a DDL string or a
+    StructType). The one way driver-built rows enter a plan.
+
+    The rows go in as a ``pyarrow.Table`` — Spark's Arrow-table path,
+    independent of ``spark.sql.execution.arrow.pyspark.enabled``.
+    Below ``spark.sql.execution.arrow.localRelationThreshold`` it plans
+    as a LocalRelation: reading it back (a collect, the build side of
+    a broadcast) runs no Spark job, and the planner sees its real
+    size. A Python list handed to ``createDataFrame`` goes through
+    ``sc.parallelize`` instead: every read of it is a Spark job, and
+    its statistics are unknown, so a join may broadcast the other,
+    larger side."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = (schema if isinstance(schema, StructType)
+              else StructType.fromDDL(schema))
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if len(rows) else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow)
+    return spark.createDataFrame(table, struct)

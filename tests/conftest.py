@@ -27,3 +27,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture
+def run_counting_jobs(spark):
+    """``run_counting_jobs(group, fn)`` -> (fn(), number of Spark jobs
+    fn ran). The status tracker fills from the asynchronous listener
+    bus, so it is drained before the count is read."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, "job count")
+        try:
+            got = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        return got, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -488,6 +488,80 @@ def test_kmeans_objective_improves(spark, sf_dir):
     assert mean_cos(4) >= mean_cos(1) - 1e-9
 
 
+def _numpy_lloyd(ids, x, k, iters):
+    """Reference spherical Lloyd in plain numpy: init = the k vectors
+    with the lowest (md5(str(id)), id), assignment = max cosine with
+    ties to the lowest label and zero-norm rows scoring 0, centroid =
+    raw mean of the members, empty labels dropped."""
+    import hashlib
+
+    import numpy as np
+
+    order = sorted(range(len(ids)), key=lambda i: (
+        hashlib.md5(str(ids[i]).encode()).hexdigest(), ids[i]))
+    cents = {lbl: x[i] for lbl, i in enumerate(order[:k])}
+
+    def unit(m):
+        n = np.linalg.norm(m, axis=1, keepdims=True)
+        return np.divide(m, n, out=np.zeros_like(m), where=n > 0)
+
+    for _ in range(iters):
+        labels = sorted(cents)
+        best = np.argmax(
+            unit(x) @ unit(np.array([cents[lb] for lb in labels])).T,
+            axis=1)
+        cents = {labels[j]: x[best == j].mean(axis=0)
+                 for j in sorted(set(best.tolist()))}
+    return cents
+
+
+def test_kmeans_fit_one_job_per_iteration_matches_numpy(
+        spark, sf_dir, run_counting_jobs):
+    """The fit costs iters + a constant number of Spark jobs (one job
+    per Lloyd iteration; the constant does not grow with iters), and
+    its centroids equal a pure-numpy Lloyd run on the same vectors."""
+    import numpy as np
+
+    from project_2_semantic_similarity_spark.sources import load_table
+
+    e = load_table(spark, sf_dir, "embeddings")
+    rows = e.select("vec_id", "embedding").collect()
+    ids = [int(r.vec_id) for r in rows]
+    x = np.array([r.embedding for r in rows], dtype=np.float64)
+    jobs = {}
+    for iters in (1, 3):
+        got, jobs[iters] = run_counting_jobs(
+            f"kmeans-fit-{iters}",
+            lambda: S._kmeans_fit(e, 6, iters, "vec_id", "embedding"))
+        want = _numpy_lloyd(ids, x, 6, iters)
+        assert [lbl for lbl, _ in got] == sorted(want)
+        for lbl, cent in got:
+            assert np.allclose(cent, want[lbl], rtol=0, atol=1e-9)
+    assert jobs[3] - jobs[1] == 2
+    assert jobs[1] - 1 <= 3, jobs
+
+
+def test_kmeans_fit_drops_empty_labels_keeping_ids(spark):
+    """With k above the number of distinct vectors, duplicate init
+    centroids lose every tie to the lowest label: their labels drop
+    out of the codebook and the surviving labels keep their ids."""
+    import numpy as np
+
+    base = [[1.0, 0.0, 0.0], [0.0, 2.0, 0.0], [0.0, 0.0, 3.0]]
+    rows = [(i, base[i % 3]) for i in range(12)]
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = S._kmeans_fit(e, 8, 2, "vec_id", "embedding")
+    ids = [r[0] for r in rows]
+    want = _numpy_lloyd(ids, np.array([r[1] for r in rows]), 8, 2)
+    assert len(got) == 3 < 8
+    assert [lbl for lbl, _ in got] == sorted(want)
+    assert sorted(tuple(c) for _, c in got) == sorted(
+        tuple(v) for v in base)
+    # each surviving label is the LOWEST init label of its vector
+    assert {lbl: tuple(c) for lbl, c in got} == {
+        lbl: tuple(v) for lbl, v in want.items()}
+
+
 def test_containment_catches_subset_doc(spark):
     """A short doc fully contained in a long one must clear the
     containment threshold while its Jaccard stays below 0.5."""

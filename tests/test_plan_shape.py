@@ -912,6 +912,7 @@ def test_bpe_vocab_fold_staged_before_rank(spark, sf_dir):
     expressions, no parquet re-scan."""
     plan = plan_of(spark, "text_bpe_vocab", sf_dir)
     assert "ExistingRDD" in plan          # checkpointed words+vocab
+    assert "LocalTableScan" in plan       # the driver-built specials
     assert "lambdafunction" not in plan   # fold ran inside the stage
     assert "FileScan" not in plan         # corpus never re-read
 
@@ -1107,7 +1108,8 @@ def test_pca_power_single_arrow_stage_no_shuffle_of_vectors(
 
     df = embedding_pca_power(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    # the RESULT is driver-built 64 rows: a LocalTableScan/parallelize
+    # the RESULT is driver-built 64 rows: a LocalTableScan
+    assert "LocalTableScan" in plan
     assert "Scan parquet" not in plan
     assert "Exchange" not in plan
 
