@@ -303,9 +303,11 @@ def registry_sweep(run, qs: dict, repo_root: str,
 
 
 def stage(spark, sf_dir: str) -> float:
-    """Perform every one-time /tmp staging the headline queries rely
-    on, outside the timed passes. Idempotent (content-fingerprint
-    keyed); returns the seconds spent."""
+    """Perform every one-time staging the headline queries rely on,
+    outside the timed passes: bucketed-table and event-dir copies on
+    local disk, and fits and probes memoized in the session's
+    operators/cache.py slots. Idempotent (content-fingerprint keyed);
+    returns the seconds spent."""
     from project_2_semantic_similarity_spark.plans.q_dedup import (
         _trained_codebook)
     from project_2_semantic_similarity_spark.plans.q_relational import (
@@ -315,13 +317,12 @@ def stage(spark, sf_dir: str) -> float:
     t0 = time.perf_counter()
     ensure_bucketed_tables(spark, sf_dir)
     S.stage_events_dir(sf_dir)
-    # k-means codebook for dedup_embedding_cosine: a one-time build
-    # artifact like the bucketed copies (/tmp-cached on the corpus
-    # fingerprint) — training is not part of any query's timing.
+    # k-means codebook for dedup_embedding_cosine: fit once per
+    # session and corpus fingerprint (a cache.py slot) — training is
+    # not part of any query's timing.
     _trained_codebook(spark, sf_dir)
-    # minhash variant-probe verdict: same one-time-artifact contract
-    # (/tmp-cached per corpus fingerprint); the probe scan is not
-    # part of dedup_minhash's timing.
+    # minhash variant-probe verdict: same per-session slot; the probe
+    # scan is not part of dedup_minhash's timing.
     from project_2_semantic_similarity_spark.plans.q_dedup import (
         ensure_minhash_variant)
 
@@ -476,10 +477,11 @@ def main() -> int:
     # replacement slots, GC/code-cache pressure) — r11's sorted sweep
     # order shifted every headline warm median +30-50% with zero plan
     # changes while gene_50k got 3x FASTER, both pure session-state
-    # artifacts. Stopping the sweep session and re-staging (idempotent,
-    # /tmp-fingerprint-cached, seconds when warm) makes headline
-    # timings a function of the queries, not of whatever the sweep
-    # ran last.
+    # artifacts. Stopping the sweep session and re-staging (idempotent:
+    # the on-disk copies are fingerprint-keyed and reused) makes
+    # headline timings a function of the queries, not of whatever the
+    # sweep ran last. The new session starts with empty slots, so the
+    # re-stage re-fits the codebook and re-runs the variant probe.
     from project_2_semantic_similarity_spark.operators.cache import (
         clear_slots)
 
@@ -522,9 +524,10 @@ def main() -> int:
     # numbers above are order-dependent — a query's "cold" can be
     # paid down (or inflated) by slots earlier headline queries
     # built, so per-query cold deltas stop isolating per-query work.
-    # Clear the replacement slots before EACH query so its cold
-    # includes exactly its own builds. Additions-only: the primary
-    # metric and the cold/warm dicts above are unchanged.
+    # clear_slots() before EACH query empties every memo (they are
+    # all cache.py slots), so its cold includes exactly its own
+    # builds, fits and probes. Additions-only: the primary metric and
+    # the cold/warm dicts above are unchanged.
     from project_2_semantic_similarity_spark.operators.cache import (
         clear_slots as _clear_slots)
 

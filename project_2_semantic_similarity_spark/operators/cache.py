@@ -1,26 +1,24 @@
-"""Session-scoped persisted-DataFrame slots.
+"""Session-scoped memo slots: the package's one cross-query memo.
 
-Round-3 lesson (VERDICT.md "What's wrong" #5): operators that
-``persist()`` an intermediate relation per call — the tf-idf weight
-table, minhash signatures, the blocked-join assignment — leaked one
-cache entry per invocation. A bench pass calling the flagship 7×
-accumulated 7 full weight tables; the resulting memory/GC pressure
-regressed even *unchanged* queries by 70–150%.
+Each logical memo gets a named SLOT holding at most ONE entry, stored
+as ``_SLOTS[slot] = ((key, applicationId), value)``:
 
-The fix is a bounded replacement policy, not "don't persist": each
-logical relation gets a SLOT holding at most ONE persisted DataFrame.
-A call with the same (slot, key) reuses the cached relation (warm
-queries over the same source skip the rebuild entirely — the
-materialize-once-query-many shape a long-running cluster session
-has); a call with a different key evicts and unpersists the previous
-entry first. ``key=None`` means "no reuse identity" — always rebuild,
-still evicting the predecessor, so repeated calls stay O(1) in cache
-footprint.
+- a call with the same key in the same Spark application is a hit and
+  returns the stored value without running the builder;
+- a different key, or a different application (a stopped and
+  recreated session in the same process), rebuilds and replaces the
+  entry;
+- ``key=None`` means "no reuse identity": rebuild every time, still
+  replacing the previous entry.
 
-At 100 TB the same contract holds: the weight table / signature
-relation is the materialization point of the pipeline, checkpointed
-or cached once per source snapshot, and replaced — not accumulated —
-when the snapshot changes.
+``keyed_persist`` slots hold persisted DataFrames (the tf-idf weights,
+minhash signatures, blocked-join assignments); the entry a rebuild
+replaces is unpersisted, so a slot never holds more than one cached
+relation. ``keyed_value`` slots hold driver-side values: probe counts,
+collected codebooks, candidate cluster pairs, localCheckpoint-backed
+results. Keys carry the source snapshot's fingerprint, so a relation
+is built once per snapshot and replaced, not accumulated, when the
+snapshot changes. ``clear_slots`` empties every slot.
 """
 
 from __future__ import annotations
@@ -29,86 +27,61 @@ from collections.abc import Callable, Hashable
 
 from pyspark.sql import DataFrame
 
-_SLOTS: dict[str, tuple[Hashable, DataFrame]] = {}
+_SLOTS: dict[str, tuple[tuple[Hashable, str | None], object]] = {}
 
 
-def _app_id(df: DataFrame | None = None) -> str | None:
-    """applicationId of the DataFrame's session (or the active
-    session). A cached DataFrame is only valid inside the session
-    that built it — if the session was stopped and recreated in the
-    same process, a key hit would serve a relation bound to the dead
-    JVM state (ADVICE r4)."""
-    try:
-        if df is not None:
-            return df.sparkSession.sparkContext.applicationId
-        from pyspark.sql import SparkSession
+def _app_id() -> str | None:
+    """applicationId of the process's live SparkContext (None when no
+    context runs). A cached relation or a measured probe belongs to
+    the application that built it."""
+    from pyspark import SparkContext
 
-        s = SparkSession.getActiveSession()
-        return None if s is None else s.sparkContext.applicationId
-    except Exception:
-        return None
+    sc = SparkContext._active_spark_context
+    return None if sc is None else sc.applicationId
+
+
+def _release(value: object) -> None:
+    """Unpersist a replaced DataFrame entry; other values just drop."""
+    if isinstance(value, DataFrame):
+        try:
+            value.unpersist()
+        except Exception:
+            pass  # its session already stopped
+
+
+def keyed_value(slot: str, key: Hashable, builder: Callable[[], object]):
+    """The value ``builder()`` returned for ``key`` in this Spark
+    application, built at most once while the slot holds it. A miss
+    replaces (and releases) the slot's previous entry. When no
+    context can be found the stored application is not compared."""
+    app = None if key is None else _app_id()
+    hit = _SLOTS.get(slot)
+    if hit is not None:
+        (stored_key, stored_app), value = hit
+        if key is not None and stored_key == key and (
+                app is None or stored_app == app):
+            return value
+        _release(value)
+        del _SLOTS[slot]
+    value = builder()
+    _SLOTS[slot] = ((key, app), value)
+    return value
 
 
 def keyed_persist(slot: str, key: Hashable,
                   builder: Callable[[], DataFrame]) -> DataFrame:
-    """Persisted DataFrame for ``slot``, rebuilt iff ``key`` differs
-    from the cached entry's (or is None). Evicted entries are
-    unpersisted — at most one cached relation per slot, ever. The
-    session's applicationId is folded into the stored key, so a
-    stopped-and-recreated session in the same process rebuilds
-    instead of serving a dead-session DataFrame."""
-    hit = _SLOTS.get(slot)
-    if hit is not None and key is not None and isinstance(hit[0], tuple):
-        stored_key, stored_app = hit[0]
-        cur_app = _app_id()
-        # cur_app None = can't determine the active session (never
-        # observed in practice) — keep the old same-process behavior
-        # rather than thrash the cache.
-        if stored_key == key and (cur_app is None
-                                  or stored_app == cur_app):
-            return hit[1]
-    if hit is not None:
-        try:
-            hit[1].unpersist()
-        except Exception:
-            pass  # previous session already stopped
-        del _SLOTS[slot]
-    df = builder().persist()
-    _SLOTS[slot] = ((key, _app_id(df)) if key is not None else None, df)
-    return df
-
-
-_VALUES: dict[str, tuple[tuple[Hashable, str | None], object]] = {}
-
-
-def keyed_value(slot: str, key: Hashable, builder: Callable[[], object]):
-    """Plain-value twin of ``keyed_persist`` for MEASURED PROBE
-    results (a LIMIT-bounded count, a sampled size estimate): the
-    probe job runs once per (slot, key, session) and the scalar is
-    memoized, so strategy gates that re-plan per execution (bench
-    cold+warm passes, plan-shape tests) stop paying the probe scan
-    each time (r13 verdict #6). Same replacement policy as
-    keyed_persist — one entry per slot, applicationId folded into
-    the identity so a recreated session re-measures."""
-    hit = _VALUES.get(slot)
-    if hit is not None and key is not None:
-        stored_key, stored_app = hit[0]
-        cur_app = _app_id()
-        if stored_key == key and (cur_app is None
-                                  or stored_app == cur_app):
-            return hit[1]
-    val = builder()
-    _VALUES[slot] = ((key, _app_id()), val)
-    return val
+    """``keyed_value`` over ``builder().persist()``: one persisted
+    relation per slot, unpersisted when a new key replaces it."""
+    return keyed_value(slot, key, lambda: builder().persist())
 
 
 def checkpoint_parquet(df: DataFrame, path: str) -> DataFrame:
     """Materialize ``df`` to parquet and continue the pipeline from
     the READ — the scratch-bounding stage boundary for multi-stage
-    pipelines (r6 VERDICT #6: the LSH prep pipeline's wide stages
-    held >77 GB of shuffle files CONCURRENTLY at 10M docs, because
-    within one job every upstream ShuffleDependency stays referenced
-    until the job ends).
+    pipelines: unsplit, the LSH prep pipeline's wide stages held
+    >77 GB of shuffle files CONCURRENTLY at 10M docs, because within
+    one job every upstream ShuffleDependency stays referenced until
+    the job ends.
 
     Splitting at a parquet boundary makes each wide stage its own
     job: once the write lands, the producing stages' shuffle files
@@ -131,11 +104,7 @@ def checkpoint_parquet(df: DataFrame, path: str) -> DataFrame:
 
 
 def clear_slots() -> None:
-    """Unpersist and drop every slot (tests / bench teardown)."""
-    for _, df in _SLOTS.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped
+    """Release and drop every slot: the one reset of every memo."""
+    for _, value in _SLOTS.values():
+        _release(value)
     _SLOTS.clear()
-    _VALUES.clear()

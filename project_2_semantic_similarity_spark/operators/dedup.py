@@ -302,7 +302,7 @@ def select_minhash_variant(
     return "narrow" if (longest or 0) <= narrow_max_shingles else "wide"
 
 
-def select_minhash_variant_from_docs(
+def probe_minhash_variant(
         docs: DataFrame, text_col: str = "text",
         narrow_max_shingles: int = NARROW_MAX_SHINGLES_PER_DOC) -> str:
     """Cheaper probe for the common docs→shingles pipeline: distinct

@@ -254,7 +254,7 @@ LIMIT {_K}"""
 @query("knn_ivf_trained", oracle=_ivf_trained_oracle())
 def knn_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-10 over the TRAINED k-means codebook (k ≈ √n, the
-    /tmp-cached artifact dedup_embedding_cosine blocks on) with
+    memoized fit dedup_embedding_cosine blocks on) with
     multi-probe (nprobe=8 of k ≈ √n lists): the trained-codebook ANN
     serving path — recall vs brute force pinned in
     tests/test_dedup_knn.py.

@@ -280,13 +280,13 @@ def text_doc_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # operators/text.py doc_vector_lsh_buckets' portable family
 # (lsh_affine_constants(42, 128) embedded as a VALUES table).
 # 128 = n_tables(16) × n_planes(8).
-_LSH_PLANE_VALUES = ",\n           ".join(
+_LSH_PLANE_ROWS = ",\n           ".join(
     f"({i}, {a}, {b})"
     for i, (a, b) in enumerate(T.lsh_affine_constants(42, 128)))
 _DOCSIM_ANN_ORACLE = f"""
 WITH {{ctes}},
 planes(idx, pa, pb) AS (
-    VALUES {_LSH_PLANE_VALUES}
+    VALUES {_LSH_PLANE_ROWS}
 ),
 wnz AS (
     SELECT doc_id, term, tfidf,

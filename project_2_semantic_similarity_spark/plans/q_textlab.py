@@ -767,7 +767,7 @@ def _prep_lsh_survivors(spark: SparkSession, sf_dir: str,
             lambda: D.shingles(kept.select("doc_id", "text")))
     exact_winners = D.exact_dedup(kept.select("doc_id", "text")) \
         .select("doc_id")
-    variant = D.select_minhash_variant_from_docs(kept)
+    variant = D.probe_minhash_variant(kept)
 
     def build_sigs():
         return D.minhash_signatures(

@@ -157,6 +157,23 @@ _CHANGED_THIS_ROUND = frozenset(
         "knn_pq",
         "text_bpe_encode_bytes",
         "text_bpe_train_batched",
+        # One memo layer: the module memo dicts became operators/
+        # cache.py slots (keyed_value), the on-disk codebook and
+        # minhash-variant memos are gone, and keyed_persist is
+        # keyed_value over a persist. Also reached, and listed above:
+        # every other keyed_persist/keyed_value user, and through the
+        # folded memos dedup_clusters, dedup_transitive_keep,
+        # dedup_minhash, dedup_embedding_cosine{,_fold},
+        # knn_batch_topk, knn_ivf_pq, knn_ivf_trained, knn_pq and
+        # dedup_phash_clusters.
+        "corpus_decontaminate",
+        "corpus_prep_pipeline",
+        "corpus_to_training_shards",
+        "dedup_simhash",
+        "graph_khop_neighbors",
+        "graph_triangle_count",
+        "knn_ivf",
+        "knn_range_search",
     }
 )
 # r15 window composition: flagship + 34 r14-debt names above + the

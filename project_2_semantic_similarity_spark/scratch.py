@@ -1,7 +1,7 @@
 """Session-scoped scratch-directory root (r7 VERDICT #7).
 
 Plans that stage data on local disk (streaming source directories,
-bucketed-table copies, trained codebooks, checkpoint dirs) previously
+bucketed-table copies, checkpoint dirs) previously
 wrote world-readable ``/tmp/p2ss_*`` paths — fine on a single box,
 racy and leaky on shared hosts where another uid could pre-create or
 read the path. Every staging site now goes through :func:`scratch_path`,

@@ -278,8 +278,8 @@ def test_minhash_auto_selects_by_doc_length(spark):
     assert D.select_minhash_variant(
         D.shingles(mixed), narrow_max_shingles=100) == "wide"
     # the cheap docs-side probe agrees (token count bounds shingles)
-    assert D.select_minhash_variant_from_docs(short) == "narrow"
-    assert D.select_minhash_variant_from_docs(
+    assert D.probe_minhash_variant(short) == "narrow"
+    assert D.probe_minhash_variant(
         mixed, narrow_max_shingles=100) == "wide"
     sh = D.shingles(mixed)
     want = {r.doc_id: r.sig for r in

@@ -1,11 +1,8 @@
 """Driver-built relations: ``session.local_frame`` plans as a
-LocalRelation (reading it back runs no Spark job), and the module memo
-dicts' FIFO bound evicts only on a new key."""
+LocalRelation (reading it back runs no Spark job)."""
 
 from __future__ import annotations
 
-from project_2_semantic_similarity_spark.operators.similarity import (
-    _bounded_put)
 from project_2_semantic_similarity_spark.session import local_frame
 
 _SCHEMA = "i int, n long, s string, v array<double>"
@@ -34,13 +31,3 @@ def test_local_frame_empty_rows(spark, run_counting_jobs):
     assert got == [] and n_jobs == 0
     assert [f.name for f in df.schema.fields] == ["i", "n", "s", "v"]
 
-
-def test_bounded_put_overwrite_at_cap_keeps_other_keys():
-    cache: dict = {}
-    for i in range(4):
-        _bounded_put(cache, i, f"v{i}", cap=4)
-    _bounded_put(cache, 2, "new", cap=4)
-    assert cache == {0: "v0", 1: "v1", 2: "new", 3: "v3"}
-    # a NEW key at the cap still evicts the oldest insertion
-    _bounded_put(cache, 9, "v9", cap=4)
-    assert cache == {1: "v1", 2: "new", 3: "v3", 9: "v9"}
