@@ -19,6 +19,11 @@ collected codebooks, candidate cluster pairs, localCheckpoint-backed
 results. Keys carry the source snapshot's fingerprint, so a relation
 is built once per snapshot and replaced, not accumulated, when the
 snapshot changes. ``clear_slots`` empties every slot.
+
+``gate`` is the one strategy gate: operators that pick between two
+exact plans by the size of an input measure it with a LIMIT-bounded
+count through a ``keyed_value`` slot and compare it with a module
+constant beside the operator.
 """
 
 from __future__ import annotations
@@ -73,6 +78,19 @@ def keyed_persist(slot: str, key: Hashable,
     """``keyed_value`` over ``builder().persist()``: one persisted
     relation per slot, unpersisted when a new key replaces it."""
     return keyed_value(slot, key, lambda: builder().persist())
+
+
+def gate(slot: str, key: Hashable, rows: DataFrame, bound: int) -> bool:
+    """Whether ``rows`` holds at most ``bound`` rows. The probe is a
+    LIMIT-bounded count (it scans at most ``bound + 1`` rows, so a
+    huge input costs no more than the bound) and is memoized in
+    ``slot`` under ``(key, bound)``: one job per key, bound and
+    application, none on a hit. ``key=None`` probes on every call.
+    Since ``n <= bound`` iff ``min(n, bound + 1) <= bound``, the
+    answer is the unbounded count's."""
+    n = keyed_value(slot, None if key is None else (key, bound),
+                    lambda: rows.limit(bound + 1).count())
+    return n <= bound
 
 
 def checkpoint_parquet(df: DataFrame, path: str) -> DataFrame:

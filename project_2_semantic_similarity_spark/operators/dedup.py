@@ -288,38 +288,25 @@ def _minhash_cols(num_hashes: int, seed: int) -> list:
 NARROW_MAX_SHINGLES_PER_DOC = 65_536
 
 
-def select_minhash_variant(
-        shingled: DataFrame,
-        narrow_max_shingles: int = NARROW_MAX_SHINGLES_PER_DOC) -> str:
-    """Pick the signature plan from the observed shingle distribution:
-    ``narrow`` when every document's distinct-shingle count fits the
-    bound, else ``wide``. One count-aggregate job over ``shingled``
-    (two hash aggs, map-side combined — trivial next to the signature
-    computation itself); callers probing AND signing should persist
-    ``shingled`` so the scan is shared."""
-    longest = shingled.groupBy("doc_id").count().agg(
-        F.max("count").alias("mx")).collect()[0].mx
-    return "narrow" if (longest or 0) <= narrow_max_shingles else "wide"
-
-
-def probe_minhash_variant(
-        docs: DataFrame, text_col: str = "text",
-        narrow_max_shingles: int = NARROW_MAX_SHINGLES_PER_DOC) -> str:
-    """Cheaper probe for the common docs→shingles pipeline: distinct
-    shingles/doc is bounded by token positions (tokens − n + 1 <
-    tokens), so max tokens/doc — one narrow scan aggregate, no
+def probe_minhash_variant(docs: DataFrame, text_col: str = "text") -> str:
+    """The ``minhash_signatures`` variant for a docs→shingles
+    pipeline: ``narrow`` when every document's distinct-shingle
+    count fits ``NARROW_MAX_SHINGLES_PER_DOC``, else ``wide``.
+    Distinct shingles/doc is bounded by token positions (tokens − n
+    + 1 < tokens), so max tokens/doc — one narrow scan aggregate, no
     groupBy shuffle of the exploded shingle relation — decides the
     variant conservatively (may pick wide when narrow would still
     fit; never the unsafe direction)."""
     longest = docs.agg(F.max(F.size(F.array_remove(
         F.split(F.col(text_col), r"\s+"), ""))).alias("mx")) \
         .collect()[0].mx
-    return "narrow" if (longest or 0) <= narrow_max_shingles else "wide"
+    return ("narrow" if (longest or 0) <= NARROW_MAX_SHINGLES_PER_DOC
+            else "wide")
 
 
 def minhash_signatures(shingled: DataFrame, num_hashes: int = 64,
-                       seed: int = 42,
-                       variant: str = "auto",
+                       seed: int = 42, *,
+                       variant: str,
                        hash_family: str = "fast") -> DataFrame:
     """(doc_id, sig array<bigint>[k]): min of each affine hash over
     the document's shingle set, packed into one array column so
@@ -338,18 +325,15 @@ def minhash_signatures(shingled: DataFrame, num_hashes: int = 64,
     group, streams through the aggregator. Use for unbounded
     documents where a per-doc array could blow a partition.
 
-    ``auto`` (default): probe the max shingles/doc
-    (``select_minhash_variant``) and choose — the narrow plan's
-    codegen win where it is safe, the wide plan's bounded group
-    memory where it is not. Both variants produce bit-identical
-    signatures (pinned in tests/test_dedup_knn.py).
+    Callers pass the variant ``probe_minhash_variant`` picked — the
+    narrow plan's codegen win where it is safe, the wide plan's
+    bounded group memory where it is not. Both variants produce
+    bit-identical signatures (pinned in tests/test_dedup_knn.py).
 
     ``hash_family``: ``fast`` (xxhash64 base) or ``portable``
     (md5-low-60-bits base, reproducible in any md5-capable engine —
     see module docstring). Same affine family over the base either
     way, so the two families differ only in the base hash."""
-    if variant == "auto":
-        variant = select_minhash_variant(shingled)
     base_expr = (portable_hash60(F.col("shingle"))
                  if hash_family == "portable"
                  else F.xxhash64("shingle"))

@@ -25,7 +25,7 @@ from project_2_semantic_similarity_spark.functions import (
     l2_norm,
 )
 from project_2_semantic_similarity_spark.operators.cache import (
-    keyed_persist, keyed_value)
+    gate, keyed_persist, keyed_value)
 from project_2_semantic_similarity_spark.session import local_frame
 
 
@@ -990,9 +990,13 @@ def cosine_pairs_lsh(embeddings: DataFrame, min_cosine: float,
         .agg(F.max("cosine").alias("cosine")))
 
 
+# cosine_range_search broadcasts the query block while it holds at
+# most this many queries, and switches to sign-LSH candidates past it.
+RANGE_BROADCAST_Q_MAX = 100_000
+
+
 def cosine_range_search(embeddings: DataFrame, queries: DataFrame,
                         min_cosine: float,
-                        broadcast_q_max: int | None = 100_000,
                         dim: int = 64, n_planes: int = 4,
                         n_tables: int = 24, seed: int = 42,
                         id_col: str = "vec_id",
@@ -1000,43 +1004,35 @@ def cosine_range_search(embeddings: DataFrame, queries: DataFrame,
                         vec_col: str = "embedding",
                         q_vec_col: str = "qv",
                         plane_family: str = "rademacher",
-                        q_count: int | None = None) -> DataFrame:
+                        cache_key: Hashable = None) -> DataFrame:
     """Fixed-radius similarity search — every corpus vector with
-    cosine ≥ ``min_cosine`` to each query — with a MEASURED-count
-    gate on the query-block broadcast (r12 verdict #3 closed the
-    ungated form).
+    cosine ≥ ``min_cosine`` to each query — with a measured-count
+    gate on the query-block broadcast.
 
-    Under ``broadcast_q_max`` (LIMIT-bounded probe — scans at most
-    bound+1 query rows) the query block broadcasts and the search is
-    EXACT: one corpus scan, the cosine in whole-stage codegen, no
-    shuffle (the output is a filter, not an agg). Past the bound —
-    a query set that scales WITH the corpus, where the broadcast
-    itself becomes the bottleneck at 100× — the plan switches to
-    multi-table sign-LSH candidates: both sides bucketed by the SAME
-    md5-derived hyperplanes (so the candidate equi-join on
-    (table_id, bucket) is bucket-local, never all-pairs), distinct
-    candidate pairs, exact cosine re-check. The LSH path has zero
-    false positives (exact filter) and recall bounded by the
-    Charikar curve 1−(1−p^b)^L — declared APPROXIMATE, the same
-    contract as cosine_pairs_lsh / dedup_embedding_cosine_lsh.
-    ``broadcast_q_max=None`` forces the LSH path (plan-shape tests).
+    Under ``RANGE_BROADCAST_Q_MAX`` queries the query block
+    broadcasts and the search is EXACT: one corpus scan, the cosine
+    in whole-stage codegen, no shuffle (the output is a filter, not
+    an agg). Past the bound — a query set that scales WITH the
+    corpus, where the broadcast itself becomes the bottleneck at
+    100× — the plan switches to multi-table sign-LSH candidates:
+    both sides bucketed by the SAME md5-derived hyperplanes (so the
+    candidate equi-join on (table_id, bucket) is bucket-local, never
+    all-pairs), distinct candidate pairs, exact cosine re-check. The
+    LSH path has zero false positives (exact filter) and recall
+    bounded by the Charikar curve 1−(1−p^b)^L — declared
+    APPROXIMATE, the same contract as cosine_pairs_lsh /
+    dedup_embedding_cosine_lsh.
 
-    PROBE COST (caller contract, r13 ADVICE): without ``q_count``,
-    every plan CONSTRUCTION runs the LIMIT-bounded count on
-    ``queries`` — when that relation is a lazy corpus-derived filter
-    (knn_range_search's every-100th-vec predicate), each build pays
-    an extra corpus scan job, repeated across bench cold+warm passes
-    and plan-shape tests. Callers with a stable query relation should
-    measure ``queries.limit(broadcast_q_max + 1).count()`` ONCE per
-    source snapshot (``operators.cache.keyed_value``) and pass it as
-    ``q_count``; the gate then plans without any probe job.
+    The query count is a ``cache.gate`` probe memoized on
+    ``cache_key``: callers whose query relation is a lazy
+    corpus-derived filter pass the source snapshot's key, so plan
+    builds after the first run no probe job. ``cache_key=None``
+    probes on every call.
     """
     ex = embeddings.select(F.col(id_col).alias("__cid"),
                            F.col(vec_col).alias("__cv"))
-    if broadcast_q_max is not None and (
-            (q_count if q_count is not None
-             else queries.limit(broadcast_q_max + 1).count())
-            <= broadcast_q_max):
+    if gate("range_search_queries", cache_key, queries,
+            RANGE_BROADCAST_Q_MAX):
         return (ex.crossJoin(F.broadcast(queries))
                 .filter(F.col("__cid") != F.col(q_id_col))
                 .withColumn("cosine",

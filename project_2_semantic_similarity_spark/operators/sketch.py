@@ -316,25 +316,6 @@ def cms_estimate(sketch: DataFrame, probes: DataFrame, key_col: str,
     )
 
 
-def cms_oracle_ctes(source_sql: str, col: str, d: int = _CMS_D,
-                    w: int = _CMS_W) -> str:
-    """DuckDB CTE bodies (``cms_vals``, ``cms_counters``) reproducing
-    cms_sketch bit-for-bit."""
-    return f"""
-cms_vals AS (
-    SELECT CAST({col} AS VARCHAR) AS v FROM ({source_sql})
-),
-cms_counters AS (
-    SELECT j,
-           CAST(('0x' || substr(md5('cms' || CAST(j AS VARCHAR) || ':' || v),
-                                1, 15))::BIGINT % {w} AS INTEGER) AS bucket,
-           count(*) AS c
-    FROM cms_vals
-    CROSS JOIN (SELECT unnest(generate_series(0, {d - 1})) AS j)
-    GROUP BY 1, 2
-)"""
-
-
 _BLOOM_K = 5
 _BLOOM_M_LOG2 = 13  # 8192 bits = 128 64-bit words
 

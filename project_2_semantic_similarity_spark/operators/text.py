@@ -51,7 +51,8 @@ from collections.abc import Hashable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from project_2_semantic_similarity_spark.operators.cache import keyed_persist
+from project_2_semantic_similarity_spark.operators.cache import (
+    gate, keyed_persist, keyed_value)
 from project_2_semantic_similarity_spark.session import local_frame
 
 TOKEN_SPLIT = r"\s+"
@@ -112,50 +113,44 @@ def with_doc_frequency(counts: DataFrame) -> DataFrame:
     return counts.join(df_tab, "term")
 
 
+# vocab_join broadcasts the vocabulary only while it holds at most
+# this many rows and, estimated from a 1024-row sample, this many bytes.
+VOCAB_BROADCAST_ROWS = 4_000_000
+VOCAB_BROADCAST_BYTES = 256 * 1024 * 1024
+
+
 def vocab_join(left: DataFrame, vocab: DataFrame,
-               on: str = "word",
-               broadcast_vocab_max: int = 4_000_000,
-               broadcast_bytes_max: int = 256 * 1024 * 1024) -> DataFrame:
+               on: str = "word") -> DataFrame:
     """Join a corpus-derived relation against the distinct-word
-    vocabulary with a MEASURED-count broadcast gate — the r12-verdict
-    refinement of the r11 unhinting. The tension: a hard
+    vocabulary behind a measured-count broadcast gate. A hard
     ``F.broadcast`` hint dies building a Heaps'-law-sized (10^8-10^9
-    distinct words on a 100 TB crawl) broadcast before any strategy
-    gate runs, but a bare unhinted join over ``localCheckpoint``ed
-    leaves plans as SortMergeJoin — LogicalRDD carries no size
-    stats, so the static planner can't broadcast no matter how small
-    the vocab is, and AQE only converts AFTER both sides' shuffle
-    map stages have been paid (measured 1.5-2x on the sf0.1
-    encode/pack family, BENCH_TRIAGE r13).
+    distinct words on a 100 TB crawl) broadcast, but a bare unhinted
+    join over ``localCheckpoint``ed leaves plans as SortMergeJoin:
+    LogicalRDD carries no size stats, so the static planner cannot
+    broadcast however small the vocab is, and AQE only converts after
+    both sides' shuffle map stages have been paid (1.5-2x measured on
+    the sf0.1 encode/pack family).
 
-    Resolution: the same measured-probe discipline as the encode
-    strategy gate (``bpe_encode_corpus``): a LIMIT-bounded count —
-    scans at most ``broadcast_vocab_max + 1`` rows of the (checkpointed,
-    materialized) vocab — picks the hinted broadcast under the bound
-    and the unhinted AQE-decided join past it. Callers MUST pass a
+    The gate is rows AND bytes: vocab rows carry token string arrays,
+    so a vocab near the row bound could be hundreds of MB per
+    executor. A 1024-row sample (JSON octet length, a uniform
+    over-estimate of row bytes) gives the average row size, and
+    ``n * avg <= VOCAB_BROADCAST_BYTES`` iff ``n <= bytes // avg``, so
+    the byte bound folds into the row bound of one ``cache.gate``
+    (a LIMIT-bounded count). Under it the join is hinted broadcast;
+    past it, unhinted and AQE-decided. Callers MUST pass a
     localCheckpointed (or otherwise materialized) vocab: on a lazy
-    vocab the probe would re-run the corpus distinct, adding a full
-    corpus pass. Sites that leave the vocab lazy keep the bare
-    unhinted join instead (text_bpe_tokenize et al., where AQE's
-    post-shuffle conversion is paid once, not multiplied through the
-    rank machinery's double read).
-
-    The gate is row-count AND size (r13 ADVICE): vocab rows carry
-    token string ARRAYS, so a near-bound vocab forced through
-    F.broadcast could be hundreds of MB per executor — the same
-    broadcast-pressure class the r11/r12 unhinting addressed. A
-    second bounded probe (1024-row sample, JSON octet length as a
-    uniform over-estimate of row bytes) extrapolates relation size;
-    past ``broadcast_bytes_max`` the join stays unhinted even under
-    the row bound."""
-    n = vocab.limit(broadcast_vocab_max + 1).count()
-    if n <= broadcast_vocab_max:
-        avg = (vocab.limit(1024)
-               .select(F.avg(F.octet_length(
-                   F.to_json(F.struct(*vocab.columns)))))
-               .first()[0])
-        if avg is None or n * float(avg) <= broadcast_bytes_max:
-            return left.join(F.broadcast(vocab), on)
+    vocab the probe would re-run the corpus distinct. Sites that
+    leave the vocab lazy keep the bare unhinted join instead."""
+    avg = (vocab.limit(1024)
+           .select(F.avg(F.octet_length(
+               F.to_json(F.struct(*vocab.columns)))))
+           .first()[0])
+    bound = VOCAB_BROADCAST_ROWS
+    if avg is not None:
+        bound = min(bound, int(VOCAB_BROADCAST_BYTES // float(avg)))
+    if gate("vocab_join_rows", None, vocab, bound):
+        return left.join(F.broadcast(vocab), on)
     return left.join(vocab, on)
 
 
@@ -366,11 +361,36 @@ def _docsim_dense_block_gemm(vecs: DataFrame, k: int,
                         F.asc("doc_b")).limit(k)
 
 
+def _dense_doc_vectors(weights: DataFrame, vocab: list[str]) -> DataFrame:
+    """(doc_id, vec, norm): each document's tf-idf weights as a dense
+    array over the sorted ``vocab`` (0.0 where the doc lacks the
+    term), with its L2 norm."""
+    return (
+        weights.groupBy("doc_id")
+        .agg(F.map_from_entries(
+            F.collect_list(F.struct("term", "tfidf"))).alias("m"))
+        .select(
+            "doc_id",
+            F.transform(
+                F.array(*[F.lit(t) for t in vocab]),
+                lambda t: F.coalesce(F.element_at("m", t), F.lit(0.0)),
+            ).alias("vec"))
+        .select(
+            "doc_id", "vec",
+            F.sqrt(F.aggregate(
+                "vec", F.lit(0.0), lambda acc, x: acc + x * x))
+             .alias("norm")))
+
+
+# doc_similarity_topk takes the dense strategy only while the nonzero
+# vocabulary and the document count are both within these bounds;
+# doc_similarity_topk_ann uses dense vectors under the same vocab bound.
+DENSE_VOCAB_MAX = 4096
+DENSE_DOCS_MAX = 100_000
+
+
 def doc_similarity_topk(corpus: DataFrame, k: int = 10,
                         round_to: int | None = None,
-                        strategy: str = "auto",
-                        dense_vocab_max: int = 4096,
-                        dense_docs_max: int = 100_000,
                         cache_key: Hashable = None) -> DataFrame:
     """Top-k most similar DOCUMENT pairs by TF-IDF cosine — the
     doc-axis dual of the reference's term-term query (terms become
@@ -391,56 +411,37 @@ def doc_similarity_topk(corpus: DataFrame, k: int = 10,
       zip_with/aggregate. No join-key skew, no 100M-row shuffle — the
       only wide op left is TakeOrderedAndProject's partial top-k.
 
-    ``auto`` picks dense iff distinct nonzero terms ≤ dense_vocab_max
-    AND doc count ≤ dense_docs_max (one tiny combined aggregate over
-    the persisted weight table). The doc bound exists because the
-    dense path broadcasts the whole per-doc vector relation
-    (n_docs × |V| doubles) into a nested-loop join — vocab alone
-    doesn't cap that size, so past either bound auto degrades to the
-    shuffle-based sparse join, which scales out (r4 VERDICT #2).
-    Exactness: all kept weights are > 0 (tf > 0, idf > 0), so a pair
-    shares a term iff its dot is > 0 — filtering dot > 0 reproduces
-    the sparse pair set exactly."""
+    Dense is picked iff distinct nonzero terms ≤ ``DENSE_VOCAB_MAX``
+    AND doc count ≤ ``DENSE_DOCS_MAX``, measured by one tiny combined
+    aggregate over the persisted weight table and memoized on
+    ``cache_key``. The doc bound exists because the dense path
+    broadcasts the whole per-doc vector relation (n_docs × |V|
+    doubles) into a nested-loop join — vocab alone doesn't cap that
+    size, so past either bound the plan is the shuffle-based sparse
+    join, which scales out. Exactness: all kept weights are > 0
+    (tf > 0, idf > 0), so a pair shares a term iff its dot is > 0 —
+    filtering dot > 0 reproduces the sparse pair set exactly."""
     # zero-weight entries (idf = 0 ⇔ term in every doc) contribute
     # nothing to any dot product or norm but ARE the hottest join
     # keys — dropping them is exact and removes the worst skew class
     weights = keyed_persist(
-        "docsim_weights", None if cache_key is None else cache_key,
+        "docsim_weights", cache_key,
         lambda: tfidf(corpus).filter(F.col("tfidf") != 0))
-    if strategy == "auto":
-        probe = weights.agg(
-            F.countDistinct("term").alias("n_terms"),
-            F.countDistinct("doc_id").alias("n_docs")).first()
-        strategy = ("dense" if probe["n_terms"] <= dense_vocab_max
-                    and probe["n_docs"] <= dense_docs_max else "sparse")
-    if strategy == "dense":
-        vocab = sorted(
-            r[0] for r in weights.select("term").distinct().collect())
+    n_terms, n_docs = keyed_value(
+        "docsim_shape", cache_key,
+        lambda: tuple(weights.agg(F.countDistinct("term"),
+                                  F.countDistinct("doc_id")).first()))
+    if n_terms <= DENSE_VOCAB_MAX and n_docs <= DENSE_DOCS_MAX:
         # persisted (replacement slot): without materialization
         # Catalyst collapses the vector-building projection INTO the
         # pair-join consumers, re-evaluating the per-doc transform/
         # map-lookup for every pair row (O(pairs·|V|) map probes
         # instead of O(docs·|V|))
         vecs = keyed_persist(
-            "docsim_vecs", None if cache_key is None else cache_key,
-            lambda: (
-                weights.groupBy("doc_id")
-                .agg(F.map_from_entries(
-                    F.collect_list(F.struct("term", "tfidf"))).alias("m"))
-                .select(
-                    "doc_id",
-                    F.transform(
-                        F.array(*[F.lit(t) for t in vocab]),
-                        lambda t: F.coalesce(F.element_at("m", t),
-                                             F.lit(0.0)),
-                    ).alias("vec"))
-                .select(
-                    "doc_id", "vec",
-                    F.sqrt(F.aggregate(
-                        "vec", F.lit(0.0), lambda acc, x: acc + x * x))
-                     .alias("norm"))
-            ),
-        )
+            "docsim_vecs", cache_key,
+            lambda: _dense_doc_vectors(weights, sorted(
+                r[0] for r in
+                weights.select("term").distinct().collect())))
         return _docsim_dense_block_gemm(vecs, k, round_to)
     else:
         norms = weights.groupBy("doc_id").agg(
@@ -640,7 +641,6 @@ def doc_similarity_topk_ann(corpus: DataFrame, k: int = 10,
                             n_planes: int = 8,
                             n_tables: int = 16,
                             seed: int = 42,
-                            dense_vocab_max: int = 4096,
                             cache_key: Hashable = None,
                             hash_family: str = "fast",
                             engine: str = "gemm") -> DataFrame:
@@ -673,7 +673,7 @@ def doc_similarity_topk_ann(corpus: DataFrame, k: int = 10,
     otherwise sparse map<term,weight> rows with a map-probe dot
     (O(|terms_a|) per pair, unbounded vocabulary)."""
     weights = keyed_persist(
-        "docsim_ann_weights", None if cache_key is None else cache_key,
+        "docsim_ann_weights", cache_key,
         lambda: tfidf(corpus).filter(F.col("tfidf") != 0))
 
     buckets = doc_vector_lsh_buckets(weights, n_planes, n_tables, seed,
@@ -689,33 +689,20 @@ def doc_similarity_topk_ann(corpus: DataFrame, k: int = 10,
         .distinct()  # a pair may collide in several tables
     )
 
-    n_terms = weights.select("term").distinct().count()
-    if n_terms <= dense_vocab_max:
-        vocab = sorted(
-            r[0] for r in weights.select("term").distinct().collect())
+    # one collect is both the vocab-size measure and the vocabulary;
+    # the bound is in the key because it truncates the stored list
+    vocab = keyed_value(
+        "docsim_ann_vocab",
+        None if cache_key is None else (cache_key, DENSE_VOCAB_MAX),
+        lambda: sorted(r[0] for r in weights.select("term").distinct()
+                       .limit(DENSE_VOCAB_MAX + 1).collect()))
+    if len(vocab) <= DENSE_VOCAB_MAX:
         # persisted (replacement slot): without materialization the
         # vector-building projection collapses into the pair-join
         # consumers and re-evaluates the map lookups once per pair
         vecs = keyed_persist(
-            "docsim_ann_vecs", None if cache_key is None else cache_key,
-            lambda: (
-                weights.groupBy("doc_id")
-                .agg(F.map_from_entries(
-                    F.collect_list(F.struct("term", "tfidf"))).alias("m"))
-                .select(
-                    "doc_id",
-                    F.transform(
-                        F.array(*[F.lit(t) for t in vocab]),
-                        lambda t: F.coalesce(F.element_at("m", t),
-                                             F.lit(0.0)),
-                    ).alias("vec"))
-                .select(
-                    "doc_id", "vec",
-                    F.sqrt(F.aggregate(
-                        "vec", F.lit(0.0), lambda acc, x: acc + x * x))
-                     .alias("norm"))
-            ),
-        )
+            "docsim_ann_vecs", cache_key,
+            lambda: _dense_doc_vectors(weights, vocab))
         if engine == "gemm":
             return _docsim_ann_bucket_gemm(buckets, vecs, k, round_to)
         a = vecs.select(F.col("doc_id").alias("doc_a"),
@@ -1277,15 +1264,17 @@ def bpe_encode_docs_join(docs: DataFrame, vocab: DataFrame,
                      .alias("token_id")))
 
 
+# bpe_encode_corpus broadcasts the word -> ids map while the
+# vocabulary holds at most this many words.
+BPE_BROADCAST_VOCAB_MAX = 4_000_000
+
+
 def bpe_encode_corpus(docs: DataFrame, vocab: DataFrame,
                       ids: DataFrame,
                       unk_id: int = 1,
-                      strategy: str = "auto",
-                      broadcast_vocab_max: int = 4_000_000,
                       doc_col: str = "doc_id",
                       text_col: str = "text") -> DataFrame:
-    """Strategy-gated corpus encode (the ``dense_vocab_max`` pattern
-    of :func:`doc_similarity_topk`): pick between the zero-shuffle
+    """Strategy-gated corpus encode: pick between the zero-shuffle
     Arrow encoder (:func:`bpe_encode_docs` — the word -> id-sequence
     map collected and broadcast once) and the windowed-join shape
     (:func:`bpe_encode_docs_join` — the map stays distributed) by
@@ -1296,19 +1285,13 @@ def bpe_encode_corpus(docs: DataFrame, vocab: DataFrame,
     path is the only shape that works, at the cost of one per-doc
     window exchange plus the AQE-decided vocab join.
 
-    ``strategy``: 'auto' gates on ``vocab.count() <=
-    broadcast_vocab_max`` (callers localCheckpoint the vocab, so the
-    count is a cheap materialized-scan job); 'broadcast' / 'join'
-    force a path. Both paths are hash-equal on any corpus, including
-    OOV -> ``unk_id`` serving behavior (twin-pinned in
-    tests/test_text.py)."""
-    if strategy not in ("auto", "broadcast", "join"):
-        raise ValueError(f"unknown encode strategy {strategy!r}")
-    if strategy == "auto":
-        strategy = ("broadcast"
-                    if vocab.count() <= broadcast_vocab_max
-                    else "join")
-    if strategy == "join":
+    The gate is ``cache.gate`` on the vocab against
+    ``BPE_BROADCAST_VOCAB_MAX`` (callers localCheckpoint the vocab,
+    so the LIMIT-bounded count is a cheap materialized scan). Both
+    paths are hash-equal on any corpus, including OOV -> ``unk_id``
+    serving behavior (twin-pinned in tests/test_text.py)."""
+    if not gate("bpe_encode_vocab_rows", None, vocab,
+                BPE_BROADCAST_VOCAB_MAX):
         return bpe_encode_docs_join(docs, vocab, ids, unk_id=unk_id,
                                     doc_col=doc_col, text_col=text_col)
     id_of = {r["token"]: r["token_id"] for r in

@@ -1726,6 +1726,10 @@ def embedding_jl_project(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("dim_idx", "component"))
 
 
+# dedup_phash_clusters runs pairs and components on the driver while
+# the corpus holds at most this many docs.
+HAMMING_LOCAL_MAX = 16384
+
 
 @query(
     "dedup_phash_clusters",
@@ -1804,23 +1808,19 @@ def dedup_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(diameter)-round persist-and-release loop dedup_clusters runs
     (operators/graph.py), on a pair relation, not the corpus.
 
-    Small-corpus fast path (r14, measured-count gated like
-    vocab_join): under ``$P2SS_HAMMING_LOCAL_MAX`` docs (default
-    16384 — ~2 GB of driver memory traffic for the n² popcounts) the
-    8-byte hashes collect to the driver and the ENTIRE
-    pairs+components stage runs as vectorized numpy
-    (operators/graph.py hamming_components_np — provably the same
+    Small-corpus fast path (a ``cache.gate`` probe, memoized per source
+    snapshot): under ``HAMMING_LOCAL_MAX`` docs (~2 GB of driver memory
+    traffic for the n² popcounts) the 8-byte hashes collect to the
+    driver and the ENTIRE pairs+components stage runs as vectorized
+    numpy (operators/graph.py hamming_components_np — provably the same
     answer: the banded join has exact recall, so its pair set is the
-    all-pairs set). This corpus's phash graph is pathologically
-    dense (949k real edges from 5k docs), and the distributed
-    pair join + O(diameter) propagation loop paid ~50 Spark jobs
-    per execution where one tiny collect suffices; past the gate the
-    distributed path runs unchanged. Equality of the two paths is
-    pinned in tests/test_dedup_knn.py."""
-    import os
-
-    from project_2_semantic_similarity_spark.operators.cache import (
-        keyed_value)
+    all-pairs set). This corpus's phash graph is pathologically dense
+    (949k real edges from 5k docs), and the distributed pair join +
+    O(diameter) propagation loop paid ~50 Spark jobs per execution where
+    one tiny collect suffices; past the gate the distributed path runs
+    unchanged. Equality of the two paths is pinned in
+    tests/test_dedup_knn.py."""
+    from project_2_semantic_similarity_spark.operators.cache import gate
     from project_2_semantic_similarity_spark.operators.dedup import (
         simhash_near_pairs)
     from project_2_semantic_similarity_spark.operators.graph import (
@@ -1833,12 +1833,9 @@ def dedup_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     hashes = (phash_image(attach_ppm_payload(docs))
               .withColumnRenamed("phash", "simhash"))
-    bound = int(os.environ.get("P2SS_HAMMING_LOCAL_MAX", "16384"))
-    n_docs = keyed_value(
-        "phash_cc_n",
-        (sf_dir, source_fingerprint(sf_dir, "documents"), bound),
-        lambda: docs.limit(bound + 1).count())
-    if n_docs <= bound:
+    if gate("phash_cc_docs",
+            (sf_dir, source_fingerprint(sf_dir, "documents")), docs,
+            HAMMING_LOCAL_MAX):
         rows = hashes.toPandas()
         doc_id, comp, size = hamming_components_np(
             rows["doc_id"].to_numpy(), rows["simhash"].to_numpy(),
@@ -2522,26 +2519,23 @@ def knn_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id (the deterministic multi-query discipline of
     knn_batch_topk).
 
-    Scale shape (r12 verdict #3): the query-block broadcast is
-    GATED on a measured LIMIT-bounded count
-    (operators/similarity.py cosine_range_search). Under the bound:
-    one corpus scan, cosine in whole-stage codegen, no shuffle. Past
-    the bound — the query set here scales WITH the corpus (every
-    100th vec), so at 100× the ungated broadcast itself was the
-    bottleneck — the plan switches to the multi-table sign-LSH
-    candidate path
+    Scale shape: the query-block broadcast is GATED on a measured
+    LIMIT-bounded count (operators/similarity.py
+    cosine_range_search). Under the bound: one corpus scan, cosine
+    in whole-stage codegen, no shuffle. Past the bound — the query
+    set here scales WITH the corpus (every 100th vec), so at 100×
+    the ungated broadcast itself was the bottleneck — the plan
+    switches to the multi-table sign-LSH candidate path
     (bucket-local equi-join, exact re-check; declared approximate
     with Charikar-curve recall, the dedup_embedding_cosine_lsh
     contract). Both paths plan-pinned in tests/test_plan_shape.py;
     at every tested SF the query count sits under the bound, so the
     declared results stay exact and fully oracled.
 
-    The gate's LIMIT-bounded count is memoized per source snapshot
-    (keyed_value, r13 verdict #6): the query relation here is a lazy
-    corpus filter, so the un-memoized probe re-scanned the corpus on
-    EVERY plan build (bench cold+warm passes each paid it)."""
-    from project_2_semantic_similarity_spark.operators.cache import (
-        keyed_value)
+    The gate's probe is memoized per source snapshot (the
+    ``cache_key``): the query relation here is a lazy corpus filter,
+    so an unmemoized probe would re-scan the corpus on every plan
+    build."""
     from project_2_semantic_similarity_spark.operators.similarity import (
         cosine_range_search)
     from project_2_semantic_similarity_spark.sources.tables import (
@@ -2551,13 +2545,9 @@ def knn_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (e.filter(F.col("vec_id") % 100 == 0)
          .select(F.col("vec_id").alias("query_id"),
                  F.col("embedding").alias("qv")))
-    bound = 100_000  # cosine_range_search's broadcast_q_max default
-    n_q = keyed_value(
-        "range_search_qcount",
-        (sf_dir, source_fingerprint(sf_dir, "embeddings")),
-        lambda: q.limit(bound + 1).count())
-    out = cosine_range_search(e, q, _RANGE_TAU, broadcast_q_max=bound,
-                              q_count=n_q)
+    out = cosine_range_search(
+        e, q, _RANGE_TAU,
+        cache_key=(sf_dir, source_fingerprint(sf_dir, "embeddings")))
     return out.select("query_id", "vec_id",
                       F.round("cosine", 6).alias("cosine"))
 

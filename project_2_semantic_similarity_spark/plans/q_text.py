@@ -667,11 +667,6 @@ _POSTINGS_BUCKETS = 16
 _POSTINGS_K = 10
 
 
-def _term_bucket_sql(term_expr: str) -> str:
-    return (f"CAST('0x' || substr(md5({term_expr}), 1, 4) AS INTEGER)"
-            f" % {_POSTINGS_BUCKETS}")
-
-
 @query(
     "sink_inverted_postings",
     oracle=f"""

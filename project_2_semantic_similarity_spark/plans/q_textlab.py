@@ -1897,10 +1897,10 @@ def text_bpe_encode_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The scale design exploits that each document is ONE ROW before
     any explode, with a STRATEGY GATE on the distinct-word count
-    (operators/text.py bpe_encode_corpus, the dense_vocab_max
-    pattern): while the word -> id-sequence map fits driver/broadcast
-    reach it is collected and broadcast once and the encode is a
-    ZERO-SHUFFLE Arrow `mapInPandas` over the documents scan; past
+    (operators/text.py bpe_encode_corpus, a ``cache.gate`` on
+    BPE_BROADCAST_VOCAB_MAX): while the word -> id-sequence map fits
+    driver/broadcast reach it is collected and broadcast once and the
+    encode is a ZERO-SHUFFLE Arrow `mapInPandas` over the documents scan; past
     the bound — Heaps' law puts a 100 TB crawl's raw distinct words
     at 10^8-10^9, far beyond any broadcast — the gate switches to
     bpe_encode_docs_join, where the map stays a DataFrame and rides

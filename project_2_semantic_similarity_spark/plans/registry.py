@@ -174,6 +174,19 @@ _CHANGED_THIS_ROUND = frozenset(
         "graph_triangle_count",
         "knn_ivf",
         "knn_range_search",
+        # One strategy gate: every LIMIT-count branch goes through
+        # cache.gate with a module-constant bound, the doc-similarity
+        # shape probe is memoized on its cache_key, the ANN vocab is
+        # one collect, and minhash_signatures takes the probed
+        # variant only. Also reached, and listed above:
+        # text_doc_similarity{,_ann}, knn_range_search,
+        # dedup_phash_clusters, dedup_minhash, dedup_clusters,
+        # corpus_prep_pipeline_lsh, corpus_context_window_ids{,_sep},
+        # corpus_shuffle_windows, corpus_to_training_batches,
+        # corpus_window_doc_starts, text_bpe_decode,
+        # text_bpe_encode_bytes, text_bpe_encode_ids, text_bpe_vocab
+        # and text_bpe_vocab_coverage.
+        "text_bpe_encode_holdout",
     }
 )
 # r15 window composition: flagship + 34 r14-debt names above + the

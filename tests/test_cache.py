@@ -74,3 +74,42 @@ def test_keyed_value_replacement_releases_persisted_entry(spark):
     assert calls == [1, 1]
     cache.clear_slots()
     assert not second.storageLevel.useMemory
+
+
+def test_keyed_gate_probes_once_per_key(spark, run_counting_jobs):
+    rows = spark.range(10)
+    assert "t_gate" not in cache._SLOTS
+    cold, cold_jobs = run_counting_jobs(
+        "gate-cold", lambda: cache.gate("t_gate", "k", rows, 10))
+    warm, warm_jobs = run_counting_jobs(
+        "gate-warm", lambda: cache.gate("t_gate", "k", rows, 10))
+    assert cold and warm and cold_jobs > 0 and warm_jobs == 0
+    # the bound is part of the key: a new bound probes again
+    assert not cache.gate("t_gate", "k", rows, 9)
+    cache.clear_slots()
+
+
+def test_unkeyed_gate_probes_on_every_call(spark, run_counting_jobs):
+    rows = spark.range(10)
+    jobs = [run_counting_jobs(
+        f"gate-none-{i}", lambda: cache.gate("t_gate_none", None, rows, 3))
+        for i in range(2)]
+    assert [answer for answer, _ in jobs] == [False, False]
+    assert all(n > 0 for _, n in jobs)
+    cache.clear_slots()
+
+
+def test_gate_probe_is_limit_bounded(spark, run_counting_jobs):
+    """10^12 rows would take hours to count; the probe reads at most
+    bound + 1 of them, in as many jobs as the probe of a 10-row
+    relation."""
+    small, small_jobs = run_counting_jobs(
+        "gate-small", lambda: cache.gate("t_gate_big", None,
+                                         spark.range(10), 5))
+    big, big_jobs = run_counting_jobs(
+        "gate-big", lambda: cache.gate("t_gate_big", None,
+                                       spark.range(10**12), 5))
+    assert not small and not big
+    assert big_jobs == small_jobs
+    assert cache._SLOTS["t_gate_big"][1] == 6  # the stored min(n, b + 1)
+    cache.clear_slots()

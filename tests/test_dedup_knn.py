@@ -49,7 +49,8 @@ def test_minhash_recall_vs_exact(spark, sf_dir):
     sh = D.shingles(docs, 3)
     exact = {(r.doc_a, r.doc_b)
              for r in D.jaccard_pairs(sh, 0.9).collect()}
-    sigs = D.minhash_signatures(sh, 64, seed=42)
+    sigs = D.minhash_signatures(sh, 64, seed=42,
+                                variant=D.probe_minhash_variant(docs))
     cands = {(r.doc_a, r.doc_b)
              for r in D.minhash_lsh_candidates(sigs, 64, 16).collect()}
     # 16 bands x 4 rows: P(candidate | J=0.9) = 1-(1-0.9^4)^16 ≈ 0.9996
@@ -264,30 +265,27 @@ def test_minhash_variants_identical(spark, sf_dir):
     assert a == b and len(a) > 0
 
 
-def test_minhash_auto_selects_by_doc_length(spark):
-    """auto picks narrow for bounded docs and falls back to wide for a
-    long-doc corpus, and all three spellings agree bit-for-bit on the
+def test_minhash_auto_selects_by_doc_length(spark, monkeypatch):
+    """The variant probe picks narrow for bounded docs and wide for a
+    long-doc corpus, and both variants agree bit-for-bit on the
     corpus that trips the switch."""
     short = spark.createDataFrame(
         [(1, "a b c d e f"), (2, "b c d e f g")], ["doc_id", "text"])
     long_text = " ".join(f"tok{i}" for i in range(300))
     mixed = spark.createDataFrame(
         [(1, "a b c d e f"), (2, long_text)], ["doc_id", "text"])
-    assert D.select_minhash_variant(D.shingles(short)) == "narrow"
-    # 300 tokens -> 298 shingles; bound 100 forces the wide plan
-    assert D.select_minhash_variant(
-        D.shingles(mixed), narrow_max_shingles=100) == "wide"
-    # the cheap docs-side probe agrees (token count bounds shingles)
     assert D.probe_minhash_variant(short) == "narrow"
-    assert D.probe_minhash_variant(
-        mixed, narrow_max_shingles=100) == "wide"
+    assert D.probe_minhash_variant(mixed) == "narrow"
+    # 300 tokens bound 298 shingles; bound 100 forces the wide plan
+    monkeypatch.setattr(D, "NARROW_MAX_SHINGLES_PER_DOC", 100)
+    assert D.probe_minhash_variant(short) == "narrow"
+    assert D.probe_minhash_variant(mixed) == "wide"
     sh = D.shingles(mixed)
     want = {r.doc_id: r.sig for r in
             D.minhash_signatures(sh, variant="narrow").collect()}
-    for variant in ("wide", "auto"):
-        got = {r.doc_id: r.sig for r in
-               D.minhash_signatures(sh, variant=variant).collect()}
-        assert got == want and len(got) == 2
+    got = {r.doc_id: r.sig for r in
+           D.minhash_signatures(sh, variant="wide").collect()}
+    assert got == want and len(got) == 2
 
 
 def test_resize_media_fixed_output(spark):
@@ -1410,21 +1408,20 @@ def test_hamming_components_local_matches_distributed(spark):
 
 def test_dedup_phash_clusters_gate_paths_equal(spark, sf_dir,
                                                monkeypatch):
-    """Query-level pin for dedup_phash_clusters' measured-count gate
-    (r14 ADVICE): the default local path (P2SS_HAMMING_LOCAL_MAX
-    covers the fixture corpus) and the distributed path (bound forced
-    to 0) must return identical rows — this exercises the gate probe,
-    the toPandas uint64 hand-off and the createDataFrame schema, not
-    just the hamming_components_np operator."""
-    from project_2_semantic_similarity_spark.plans import registry
+    """Query-level pin for dedup_phash_clusters' measured-count gate:
+    the default local path (HAMMING_LOCAL_MAX covers the fixture
+    corpus) and the distributed path (bound forced to 0) must return
+    identical rows — this exercises the gate probe, the toPandas
+    uint64 hand-off and the local_frame schema, not just the
+    hamming_components_np operator."""
+    from project_2_semantic_similarity_spark.plans import q_knn, registry
 
     registry.load_all()
     fn = registry.QUERIES["dedup_phash_clusters"]
 
-    monkeypatch.delenv("P2SS_HAMMING_LOCAL_MAX", raising=False)
     local = sorted(map(tuple, fn(spark, sf_dir).collect()))
 
-    monkeypatch.setenv("P2SS_HAMMING_LOCAL_MAX", "0")
+    monkeypatch.setattr(q_knn, "HAMMING_LOCAL_MAX", 0)
     dist = sorted(map(tuple, fn(spark, sf_dir).collect()))
 
     assert local and local == dist

@@ -917,7 +917,8 @@ def test_bpe_vocab_fold_staged_before_rank(spark, sf_dir):
     assert "FileScan" not in plan         # corpus never re-read
 
 
-def test_no_hard_broadcast_hint_on_vocab_relation(spark, sf_dir):
+def test_no_hard_broadcast_hint_on_vocab_relation(spark, sf_dir,
+                                                  monkeypatch):
     """r11 VERDICT #1: the distinct-word vocabulary is Heaps'-law
     sized (10^8-10^9 rows on a 100 TB crawl, per the tokenizer-family
     docstrings' own analysis) — a hard F.broadcast hint bypasses
@@ -928,8 +929,6 @@ def test_no_hard_broadcast_hint_on_vocab_relation(spark, sf_dir):
     the unhinted encode-side joins already follow). Runtime pin: at
     toy scale AQE still picks the broadcast, so dropping the hint
     changes nothing where the hint used to be valid."""
-    import inspect
-
     import project_2_semantic_similarity_spark.operators.text as ot
     import project_2_semantic_similarity_spark.plans.q_text as qt
     import project_2_semantic_similarity_spark.plans.q_textlab as q
@@ -943,13 +942,9 @@ def test_no_hard_broadcast_hint_on_vocab_relation(spark, sf_dir):
     # q_text: the PMI per-term df table is the same Heaps'-law class
     with open(qt.__file__) as fh:
         assert "join(F.broadcast(tf" not in fh.read()
-    # r13 refinement: checkpointed-vocab sites route through the
-    # MEASURED-count gate (vocab_join) — the hint comes back only
-    # under a LIMIT-bounded probe, never unconditionally. Pin the
-    # probe so a future edit can't quietly turn the gate into a
-    # hard hint again.
-    gate_src = inspect.getsource(ot.vocab_join)
-    assert "limit(broadcast_vocab_max + 1).count()" in gate_src
+    # checkpointed-vocab sites route through the MEASURED-count gate
+    # (vocab_join) — the hint comes back only under a cache.gate
+    # probe, never unconditionally
     assert "vocab_join(" in src  # the sites actually use it
 
     df = e.queries()["text_bpe_tokenize"](spark, sf_dir)
@@ -968,6 +963,7 @@ def test_no_hard_broadcast_hint_on_vocab_relation(spark, sf_dir):
     # SMJ in the first place.
     from pyspark.sql import functions as F
 
+    from project_2_semantic_similarity_spark.operators.cache import gate
     from project_2_semantic_similarity_spark.operators.text import (
         bpe_word_tokens, vocab_join)
     from project_2_semantic_similarity_spark.sources import load_table
@@ -978,8 +974,18 @@ def test_no_hard_broadcast_hint_on_vocab_relation(spark, sf_dir):
              ).localCheckpoint()
     vocab = bpe_word_tokens(words.select("word").distinct()
                             ).localCheckpoint()
+    gated = []
+
+    def recording_gate(slot, key, rows, bound):
+        gated.append(rows)
+        return gate(slot, key, rows, bound)
+
+    monkeypatch.setattr(ot, "gate", recording_gate)
     jplan = (vocab_join(words, vocab)
              ._jdf.queryExecution().executedPlan().toString())
+    # pin the probe so an edit can't quietly turn the gate into a
+    # hard hint again
+    assert len(gated) == 1 and gated[0] is vocab
     # unexecuted plan (isFinalPlan=false): a BroadcastHashJoin HERE
     # is the static planner's decision, not an AQE conversion
     assert "BroadcastHashJoin" in jplan
@@ -1239,14 +1245,17 @@ def test_lpa_rounds_read_checkpoints_no_cartesian(spark, sf_dir):
     assert "Scan parquet" not in plan       # lineage truncated
 
 
-def test_range_search_broadcast_gate(spark, sf_dir):
-    """knn_range_search (r12 verdict #3): under the measured bound
-    the query block is a broadcast nested-loop (one corpus scan, no
-    shuffle); PAST the bound there must be NO broadcast of the
-    query relation and NO cartesian — the plan switches to the
-    sign-LSH candidate equi-join on (table_id, bucket)."""
+def test_range_search_broadcast_gate(spark, sf_dir, monkeypatch):
+    """knn_range_search: under the measured bound the query block is
+    a broadcast nested-loop (one corpus scan, no shuffle); PAST the
+    bound (forced by a zero RANGE_BROADCAST_Q_MAX) there must be NO
+    broadcast of the query relation and NO cartesian — the plan
+    switches to the sign-LSH candidate equi-join on (table_id,
+    bucket)."""
     from pyspark.sql import functions as F
 
+    from project_2_semantic_similarity_spark.operators import (
+        similarity as S)
     from project_2_semantic_similarity_spark.operators.similarity import (
         cosine_range_search)
     from project_2_semantic_similarity_spark.sources import load_table
@@ -1256,11 +1265,12 @@ def test_range_search_broadcast_gate(spark, sf_dir):
          .select(F.col("vec_id").alias("query_id"),
                  F.col("embedding").alias("qv")))
 
-    under = cosine_range_search(e, q, 0.25, broadcast_q_max=100_000)
+    under = cosine_range_search(e, q, 0.25)
     p_under = under._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" in p_under
 
-    over = cosine_range_search(e, q, 0.25, broadcast_q_max=None)
+    monkeypatch.setattr(S, "RANGE_BROADCAST_Q_MAX", 0)
+    over = cosine_range_search(e, q, 0.25)
     p_over = over._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in p_over
     assert "CartesianProduct" not in p_over

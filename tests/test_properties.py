@@ -93,12 +93,12 @@ encode_corpus_strategy = st.lists(
 @_SETTINGS
 @given(train=encode_corpus_strategy, serve=encode_corpus_strategy)
 def test_encode_strategy_twins_property(spark, train, serve):
-    """PROPERTY pin for the r11 strategy gate: on ANY corpus pair
+    """PROPERTY pin for the encode strategy gate: on ANY corpus pair
     (vocabulary trained on one, serving encode on the other — so OOV
     fires arbitrarily), the broadcast and join strategies emit the
     identical (doc_id, pos, token_id) relation."""
     from project_2_semantic_similarity_spark.operators.text import (
-        bpe_encode_corpus, bpe_word_tokens)
+        bpe_encode_corpus, bpe_encode_docs_join, bpe_word_tokens)
 
     train_words = sorted({w for d in train for w in d})
     if not train_words:
@@ -111,10 +111,12 @@ def test_encode_strategy_twins_property(spark, train, serve):
     docs = spark.createDataFrame(
         [(i, " ".join(d)) for i, d in enumerate(serve)],
         ["doc_id", "text"])
+    # a test vocab is far under BPE_BROADCAST_VOCAB_MAX, so the gate
+    # takes the broadcast encoder; the join branch is called directly
     a = sorted(map(tuple, bpe_encode_corpus(
-        docs, vocab, ids, unk_id=1, strategy="broadcast").collect()))
-    b = sorted(map(tuple, bpe_encode_corpus(
-        docs, vocab, ids, unk_id=1, strategy="join").collect()))
+        docs, vocab, ids, unk_id=1).collect()))
+    b = sorted(map(tuple, bpe_encode_docs_join(
+        docs, vocab, ids, unk_id=1).collect()))
     assert a == b
 
 

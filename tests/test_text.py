@@ -143,39 +143,45 @@ def test_flagship_on_testdata(spark, sf_dir):
     assert all(0 < s <= 1.0 + 1e-9 for s in sims)
 
 
-def test_doc_similarity_strategies_agree(spark, sf_dir):
+def _docsim_plan(docs):
+    return (T.doc_similarity_topk(docs, k=10, round_to=6)
+            ._jdf.queryExecution().executedPlan().toString())
+
+
+def test_doc_similarity_strategies_agree(spark, sf_dir, monkeypatch):
     """The dense (small-vocab vector) and sparse (term self-join)
-    physical strategies must produce identical top-k doc pairs."""
+    physical strategies must produce identical top-k doc pairs. The
+    fixture's vocab fits DENSE_VOCAB_MAX; a zero bound forces
+    sparse."""
     docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
             .select(F.col("doc_id").cast("string").alias("doc_id"), "text"))
-    dense = T.doc_similarity_topk(docs, k=10, round_to=6,
-                                  strategy="dense").collect()
-    sparse = T.doc_similarity_topk(docs, k=10, round_to=6,
-                                   strategy="sparse").collect()
+    assert "MapInPandas" in _docsim_plan(docs)  # the dense block gemm
+    dense = T.doc_similarity_topk(docs, k=10, round_to=6).collect()
+    monkeypatch.setattr(T, "DENSE_VOCAB_MAX", 0)
+    assert "MapInPandas" not in _docsim_plan(docs)
+    sparse = T.doc_similarity_topk(docs, k=10, round_to=6).collect()
     assert [tuple(r) for r in dense] == [tuple(r) for r in sparse]
     assert len(dense) == 10
 
 
-def test_doc_similarity_auto_guards_doc_count(spark, sf_dir):
-    """auto must refuse the dense (broadcast-NLJ) strategy past the
-    doc-count bound even when the vocab fits — forcing the bound to
-    1 doc here must route through the sparse term self-join with
-    identical results (r4 VERDICT #2: vocab alone doesn't cap the
-    broadcast's n_docs × |V| size)."""
+def test_doc_similarity_auto_guards_doc_count(spark, sf_dir, monkeypatch):
+    """The gate must refuse the dense (broadcast-NLJ) strategy past
+    the doc-count bound even when the vocab fits — forcing the bound
+    to 1 doc here must route through the sparse term self-join with
+    identical results (vocab alone doesn't cap the broadcast's
+    n_docs × |V| size)."""
     docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
             .select(F.col("doc_id").cast("string").alias("doc_id"), "text"))
-    guarded = T.doc_similarity_topk(docs, k=10, round_to=6,
-                                    strategy="auto",
-                                    dense_docs_max=1).collect()
-    sparse = T.doc_similarity_topk(docs, k=10, round_to=6,
-                                   strategy="sparse").collect()
+    with monkeypatch.context() as m:
+        m.setattr(T, "DENSE_VOCAB_MAX", 0)
+        sparse = T.doc_similarity_topk(docs, k=10, round_to=6).collect()
+    monkeypatch.setattr(T, "DENSE_DOCS_MAX", 1)
+    guarded = T.doc_similarity_topk(docs, k=10, round_to=6).collect()
     assert [tuple(r) for r in guarded] == [tuple(r) for r in sparse]
     # and the guarded plan must not contain the PAIR broadcast-NLJ
     # the dense strategy plans (its doc_a < doc_b condition); NLJs of
     # 1-row scalar aggregates (the n_docs attach) are fine
-    plan = (T.doc_similarity_topk(docs, k=10, round_to=6,
-                                  strategy="auto", dense_docs_max=1)
-            ._jdf.queryExecution().executedPlan().toString())
+    plan = _docsim_plan(docs)
     import re as _re
     pair_nlj = [ln for ln in plan.splitlines()
                 if "BroadcastNestedLoopJoin" in ln
@@ -183,7 +189,7 @@ def test_doc_similarity_auto_guards_doc_count(spark, sf_dir):
     assert not pair_nlj, pair_nlj
 
 
-def test_doc_similarity_ann_recall_vs_exact(spark, sf_dir):
+def test_doc_similarity_ann_recall_vs_exact(spark, sf_dir, monkeypatch):
     """ANN prefilter (minhash-LSH candidates + exact re-rank) must
     recover ≥80% of the exact top-k pairs, and agree on the cosine of
     every pair it does return (the re-rank is exact — false negatives
@@ -202,9 +208,10 @@ def test_doc_similarity_ann_recall_vs_exact(spark, sf_dir):
         assert abs(exact[pair] - ann[pair]) < 1e-9
     # the sparse (map-probe) re-rank must agree with the dense
     # (zip_with) fast path pair-for-pair
+    monkeypatch.setattr(T, "DENSE_VOCAB_MAX", 0)
     sparse = {(r.doc_a, r.doc_b): r.similarity
               for r in T.doc_similarity_topk_ann(
-                  docs, k=10, round_to=6, dense_vocab_max=0).collect()}
+                  docs, k=10, round_to=6).collect()}
     assert sparse == ann
 
 
@@ -495,33 +502,41 @@ def _encode_fixture(spark, sf_dir="/root/testdata/sf0.001"):
     return docs, vocab, ids.localCheckpoint()
 
 
+def _encode_broadcast(docs, vocab, ids, unk_id=1):
+    """bpe_encode_corpus on a vocab under BPE_BROADCAST_VOCAB_MAX:
+    the gate takes the broadcast Arrow encoder (pinned by its Python
+    stage)."""
+    out = T.bpe_encode_corpus(docs, vocab, ids, unk_id=unk_id)
+    assert "MapInPandas" in (
+        out._jdf.queryExecution().executedPlan().toString())
+    return sorted(map(tuple, out.collect()))
+
+
 def test_bpe_encode_corpus_strategies_hash_equal(spark):
-    """TWIN PIN for the strategy gate (r10 verdict #1): the
-    zero-shuffle broadcast encoder and the windowed-join shape must
-    produce the identical (doc_id, pos, token_id) relation on the
-    same corpus — the gate may only ever change the PLAN."""
+    """TWIN PIN for the strategy gate: the zero-shuffle broadcast
+    encoder and the windowed-join shape must produce the identical
+    (doc_id, pos, token_id) relation on the same corpus — the gate
+    may only ever change the PLAN."""
     docs, vocab, ids = _encode_fixture(spark)
-    a = sorted(map(tuple, T.bpe_encode_corpus(
-        docs, vocab, ids, strategy="broadcast").collect()))
-    b = sorted(map(tuple, T.bpe_encode_corpus(
-        docs, vocab, ids, strategy="join").collect()))
+    a = _encode_broadcast(docs, vocab, ids)
+    b = sorted(map(tuple, T.bpe_encode_docs_join(
+        docs, vocab, ids).collect()))
     assert len(a) > 1000
     assert a == b
 
 
-def test_bpe_encode_corpus_auto_gate_forces_join(spark):
-    """broadcast_vocab_max=0 must route auto to the join path — the
-    forced-huge-vocab shape a 10^9-distinct-word crawl takes. The
-    join plan must contain NO Python stage (the Arrow encoder's
+def test_bpe_encode_corpus_auto_gate_forces_join(spark, monkeypatch):
+    """BPE_BROADCAST_VOCAB_MAX=0 must route the gate to the join path
+    — the forced-huge-vocab shape a 10^9-distinct-word crawl takes.
+    The join plan must contain NO Python stage (the Arrow encoder's
     mapInPandas) and no driver collect of the vocabulary."""
     docs, vocab, ids = _encode_fixture(spark)
-    out = T.bpe_encode_corpus(docs, vocab, ids, strategy="auto",
-                              broadcast_vocab_max=0)
+    a = _encode_broadcast(docs, vocab, ids)
+    monkeypatch.setattr(T, "BPE_BROADCAST_VOCAB_MAX", 0)
+    out = T.bpe_encode_corpus(docs, vocab, ids)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "mapInPandas" not in plan and "MapInPandas" not in plan
     # and it still matches the broadcast twin
-    a = sorted(map(tuple, T.bpe_encode_corpus(
-        docs, vocab, ids, strategy="broadcast").collect()))
     assert sorted(map(tuple, out.collect())) == a
 
 
@@ -539,10 +554,9 @@ def test_bpe_encode_join_oov_maps_to_unk(spark):
     docs = spark.createDataFrame(
         [(1, "hello unseen world"), (2, "total mystery")],
         ["doc_id", "text"])
-    a = sorted(map(tuple, T.bpe_encode_corpus(
-        docs, vocab, ids, unk_id=1, strategy="broadcast").collect()))
-    b = sorted(map(tuple, T.bpe_encode_corpus(
-        docs, vocab, ids, unk_id=1, strategy="join").collect()))
+    a = _encode_broadcast(docs, vocab, ids, unk_id=1)
+    b = sorted(map(tuple, T.bpe_encode_docs_join(
+        docs, vocab, ids, unk_id=1).collect()))
     assert a == b
     unk_rows = [r for r in a if r[2] == 1]
     # 'unseen' -> one <unk>; 'total' + 'mystery' -> one <unk> each

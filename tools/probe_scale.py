@@ -829,17 +829,20 @@ def main() -> None:
             # at this size is n²/100 ≈ 4e10 interpreted cosine
             # folds; the LSH path's work is the candidate volume
             # it reports.
-            from project_2_semantic_similarity_spark.operators.similarity \
-                import cosine_range_search
+            from unittest import mock
+
+            from project_2_semantic_similarity_spark.operators import (
+                similarity as SIM)
 
             e = spark.read.parquet(f"{out}/embeddings.parquet")
             q = (e.filter(F.col("vec_id") % 100 == 0)
                  .select(F.col("vec_id").alias("query_id"),
                          F.col("embedding").alias("qv")))
             n_q = q.count()
-            res = cosine_range_search(
-                e, q, 0.8, broadcast_q_max=None,
-                n_planes=12, n_tables=8)
+            # a zero bound forces the LSH branch
+            with mock.patch.object(SIM, "RANGE_BROADCAST_Q_MAX", 0):
+                res = SIM.cosine_range_search(
+                    e, q, 0.8, n_planes=12, n_tables=8)
             cnt = res.count()
             print(f"  {n_q} queries x {e.count()} corpus, tau=0.8: "
                   f"{cnt} in-radius pairs via LSH candidates",
