@@ -1042,15 +1042,15 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     Edges are canonically oriented (p1 < p2) so each triangle
     materializes EXACTLY once as (a<b<c): two equi-join hops (wedge
     build + closing-edge check), never an undirected 6x blow-up. The
-    edge relation is built once and persisted (keyed_persist slot),
-    then drives all three join legs.
+    edge relation is built once per lineitem snapshot and persisted
+    (keyed_persist slot keyed on the source fingerprint), then drives
+    all three join legs.
 
-    Scale (implemented r9, was documented-only before): edges
-    re-orient LOW-degree -> HIGH-degree endpoint (ties by id) before
-    the wedge join — Suri & Vassilvitskii's (WWW'11) bound: each
-    wedge is counted at its lowest-degree corner, so wedge volume is
-    Sum(out_deg^2) with out_deg <= O(sqrt(m)) instead of Sum(deg^2)
-    on the hub nodes. Every triangle still materializes exactly once
+    Scale: edges re-orient LOW-degree -> HIGH-degree endpoint (ties
+    by id) before the wedge join — Suri & Vassilvitskii's (WWW'11)
+    bound: each wedge is counted at its lowest-degree corner, so
+    wedge volume is Sum(out_deg^2) with out_deg <= O(sqrt(m)) instead
+    of Sum(deg^2) on the hub nodes. Every triangle still materializes exactly once
     (its minimum-order corner has out-edges to the other two, whose
     closing edge carries the same orientation). The degree relation
     is node-cardinality, so its join is left unhinted: AQE
@@ -1058,6 +1058,8 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     billion-node scale. Top-20 rides TakeOrderedAndProject."""
     from project_2_semantic_similarity_spark.operators.cache import (
         keyed_persist)
+    from project_2_semantic_similarity_spark.sources.tables import (
+        source_fingerprint)
 
     def build():
         li = (load_table(spark, sf_dir, "lineitem")
@@ -1089,7 +1091,9 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(fwd, F.col("p2")).otherwise(F.col("p1")).alias("dst"),
             F.when(fwd, F.col("g2")).otherwise(F.col("g1")).alias("gdst"))
 
-    oriented = keyed_persist("triangle_edges", sf_dir, build)
+    oriented = keyed_persist(
+        "triangle_edges", (sf_dir, source_fingerprint(sf_dir, "lineitem")),
+        build)
     e1, e2, e3 = (oriented.alias("e1"), oriented.alias("e2"),
                   oriented.alias("e3"))
     lt = (F.col("e1.gdst") < F.col("e2.gdst")) | (
@@ -1367,9 +1371,12 @@ def graph_khop_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: frontier and visited relations are node-sized, edges
     shuffle once per hop on the join key; for large k switch to the
     persist-per-round loop discipline of operators/graph.py —
-    identical joins, checkpointed lineage."""
+    identical joins, checkpointed lineage. The edge relation is a
+    keyed_persist slot keyed on the lineitem snapshot."""
     from project_2_semantic_similarity_spark.operators.cache import (
         keyed_persist)
+    from project_2_semantic_similarity_spark.sources.tables import (
+        source_fingerprint)
 
     def build():
         li = (load_table(spark, sf_dir, "lineitem")
@@ -1385,7 +1392,9 @@ def graph_khop_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .unionAll(pairs.select(F.col("p2").alias("u"),
                                        F.col("p1").alias("v"))))
 
-    edges = keyed_persist("khop_edges", sf_dir, build)
+    edges = keyed_persist(
+        "khop_edges", (sf_dir, source_fingerprint(sf_dir, "lineitem")),
+        build)
     seed = 1
     hop1 = (edges.filter((F.col("u") == seed) & (F.col("v") != seed))
             .select(F.col("v").alias("part")).distinct())

@@ -2400,8 +2400,6 @@ def scan_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     it derives the expected survivors from the base table (doc_id %
     10 ≠ 0), so the check proves the corrupt rows are EXACTLY the
     engineered ones — no silent over- or under-dropping."""
-    import os
-
     out = _tmp(sf_dir, "documents_jsonl_corrupt")
     docs = load_table(spark, sf_dir, "documents")
     good = docs.filter(F.col("doc_id") % 10 != 0).select(

@@ -187,6 +187,21 @@ _CHANGED_THIS_ROUND = frozenset(
         # text_bpe_encode_bytes, text_bpe_encode_ids, text_bpe_vocab
         # and text_bpe_vocab_coverage.
         "text_bpe_encode_holdout",
+        # One tokenizer pipeline: word counts, vocabularies, token
+        # ids, doc offsets, window slots and the per-doc fertility
+        # tail come from shared q_textlab helpers; the holdout and
+        # byte encodes keep their words and vocabulary in
+        # snapshot-keyed slots; text_token_count_bpe reads tl_nbpe;
+        # the graph edge slots are keyed on the lineitem snapshot.
+        # Also reached, and listed above: the rest of the BPE family,
+        # corpus_context_window_ids{,_sep}, corpus_window_doc_starts,
+        # corpus_shuffle_windows, corpus_to_training_batches,
+        # text_unigram_tokenize, text_bpe_train_batched,
+        # graph_triangle_count and graph_khop_neighbors.
+        "text_bpe_tokenize_10k",
+        "text_bpe_train",
+        "text_bpe_train_bytes",
+        "text_wordpiece_tokenize",
     }
 )
 # r15 window composition: flagship + 34 r14-debt names above + the

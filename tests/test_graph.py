@@ -122,3 +122,37 @@ def test_triangle_count_degree_ordered_literal(spark, tmp_path):
     got = {r.l_partkey: r.n_triangles
            for r in QUERIES["graph_triangle_count"](spark, d).collect()}
     assert got == {1: 3, 2: 3, 3: 3, 4: 3}
+
+
+def test_triangle_edges_follow_an_in_place_lineitem_rewrite(
+        spark, sf_dir, tmp_path):
+    """graph_triangle_count persists its oriented edges in a slot keyed
+    on the lineitem snapshot: after lineitem is rewritten in place
+    with a row subset, the next call must rebuild the edges and answer
+    as a fresh build does, not serve the old snapshot's triangles."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from project_2_semantic_similarity_spark.operators.cache import (
+        clear_slots)
+    from project_2_semantic_similarity_spark.plans.registry import (
+        QUERIES, load_all)
+
+    load_all()
+    d = str(tmp_path)
+    path = f"{d}/lineitem.parquet"
+    shutil.copyfile(f"{sf_dir}/lineitem.parquet", path)
+
+    def triangles():
+        return sorted(map(tuple, QUERIES["graph_triangle_count"](
+            spark, d).collect()))
+
+    before = triangles()
+    table = pq.read_table(path)
+    pq.write_table(table.slice(0, table.num_rows // 3), path)
+    after_rewrite = triangles()
+    clear_slots()
+    fresh = triangles()
+    assert fresh != before  # the subset changes the answer
+    assert after_rewrite == fresh

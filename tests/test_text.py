@@ -477,29 +477,16 @@ def test_bpe_train_batched_disjoint_and_wellformed(spark):
             used.update((a, b, a + b))
 
 
-def _encode_fixture(spark, sf_dir="/root/testdata/sf0.001"):
-    """(docs, vocab, ids) exactly as text_bpe_encode_ids builds them,
-    on the sf0.001 corpus."""
-    from project_2_semantic_similarity_spark.operators.rank import (
-        with_global_rank)
+def _encode_fixture(spark, sf_dir):
+    """(docs, vocab, ids) from the helpers text_bpe_encode_ids builds
+    them with."""
+    from project_2_semantic_similarity_spark.plans import q_textlab as q
     from project_2_semantic_similarity_spark.sources import load_table
 
-    docs = load_table(spark, sf_dir, "documents")
-    words = (docs
-             .select(F.explode(F.split(F.col("text"), " ")).alias("word"))
-             .filter(F.col("word") != "")
-             .groupBy("word").agg(F.count("*").alias("cnt"))
-             ).localCheckpoint()
-    vocab = T.bpe_word_tokens(
-        words.select("word").distinct()).localCheckpoint()
-    freq = (words.join(F.broadcast(vocab), "word")
-            .select(F.explode("tokens").alias("token"), "cnt")
-            .groupBy("token").agg(F.sum("cnt").alias("freq")))
-    ids = with_global_rank(
-        freq, [F.col("freq").desc(), F.col("token").asc()],
-        rank_col="rn").select(
-        "token", (F.col("rn") + 3).cast("long").alias("token_id"))
-    return docs, vocab, ids.localCheckpoint()
+    vocab = q._corpus_bpe_vocab(spark, sf_dir)
+    ids = q._token_ids(q._token_freq(q._corpus_word_counts(spark, sf_dir),
+                                     vocab))
+    return load_table(spark, sf_dir, "documents"), vocab, ids
 
 
 def _encode_broadcast(docs, vocab, ids, unk_id=1):
@@ -512,12 +499,12 @@ def _encode_broadcast(docs, vocab, ids, unk_id=1):
     return sorted(map(tuple, out.collect()))
 
 
-def test_bpe_encode_corpus_strategies_hash_equal(spark):
+def test_bpe_encode_corpus_strategies_hash_equal(spark, sf_dir):
     """TWIN PIN for the strategy gate: the zero-shuffle broadcast
     encoder and the windowed-join shape must produce the identical
     (doc_id, pos, token_id) relation on the same corpus — the gate
     may only ever change the PLAN."""
-    docs, vocab, ids = _encode_fixture(spark)
+    docs, vocab, ids = _encode_fixture(spark, sf_dir)
     a = _encode_broadcast(docs, vocab, ids)
     b = sorted(map(tuple, T.bpe_encode_docs_join(
         docs, vocab, ids).collect()))
@@ -525,12 +512,13 @@ def test_bpe_encode_corpus_strategies_hash_equal(spark):
     assert a == b
 
 
-def test_bpe_encode_corpus_auto_gate_forces_join(spark, monkeypatch):
+def test_bpe_encode_corpus_auto_gate_forces_join(spark, sf_dir,
+                                                  monkeypatch):
     """BPE_BROADCAST_VOCAB_MAX=0 must route the gate to the join path
     — the forced-huge-vocab shape a 10^9-distinct-word crawl takes.
     The join plan must contain NO Python stage (the Arrow encoder's
     mapInPandas) and no driver collect of the vocabulary."""
-    docs, vocab, ids = _encode_fixture(spark)
+    docs, vocab, ids = _encode_fixture(spark, sf_dir)
     a = _encode_broadcast(docs, vocab, ids)
     monkeypatch.setattr(T, "BPE_BROADCAST_VOCAB_MAX", 0)
     out = T.bpe_encode_corpus(docs, vocab, ids)
@@ -538,6 +526,30 @@ def test_bpe_encode_corpus_auto_gate_forces_join(spark, monkeypatch):
     assert "mapInPandas" not in plan and "MapInPandas" not in plan
     # and it still matches the broadcast twin
     assert sorted(map(tuple, out.collect())) == a
+
+
+@pytest.mark.parametrize("name", ["text_bpe_encode_holdout",
+                                  "text_bpe_encode_bytes"])
+def test_holdout_and_byte_encodes_reuse_their_slots(spark, sf_dir,
+                                                    run_counting_jobs,
+                                                    name):
+    """The holdout and byte encodes keep their word counts and
+    vocabulary in snapshot-keyed slots, so a warm plan build +
+    collect runs fewer Spark jobs than the cold one that builds
+    them."""
+    from project_2_semantic_similarity_spark.operators.cache import (
+        clear_slots)
+    from project_2_semantic_similarity_spark.plans import registry
+
+    registry.load_all()
+    fn = registry.QUERIES[name]
+    clear_slots()
+    cold_rows, cold = run_counting_jobs(
+        f"{name}_cold", lambda: fn(spark, sf_dir).collect())
+    warm_rows, warm = run_counting_jobs(
+        f"{name}_warm", lambda: fn(spark, sf_dir).collect())
+    assert sorted(map(tuple, warm_rows)) == sorted(map(tuple, cold_rows))
+    assert warm < cold, (cold, warm)
 
 
 def test_bpe_encode_join_oov_maps_to_unk(spark):
