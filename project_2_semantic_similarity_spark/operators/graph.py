@@ -1,7 +1,6 @@
 """Graph operators for dedup clustering (SURVEY.md §2.B
 "LLM-data-pipeline extensions"): connected components over a
-near-duplicate pair relation, expressed as iterative DataFrame
-min-label propagation.
+near-duplicate pair relation.
 
 Why this exists: pair-level dedup (jaccard_pairs, cosine pairs,
 minhash candidates) yields EDGES; a training pipeline needs the
@@ -11,7 +10,12 @@ One-hop suppression (dedup_pipeline) drops the b-side of each pair;
 transitive closure additionally collapses chains a~b~c where (a, c)
 was never itself a discovered pair.
 
-Scale design: the classic MapReduce connected-components literature
+Scale design: a near-dup pair relation is usually far smaller than
+the corpus it came from, so ``dedup_clusters`` collects up to
+``CC_LOCAL_MAX_EDGES`` pairs in one Arrow pass and labels them on the
+driver (``min_label_components``, numpy). Past that bound the
+distributed ``connected_components`` runs: iterative DataFrame
+min-label propagation. The MapReduce connected-components literature
 (Kiveris et al., "Connected Components in MapReduce and Beyond",
 SoCC'14) shows label propagation converges in O(diameter) rounds;
 near-dup graphs are star-/clique-like (duplicates of one source
@@ -19,17 +23,22 @@ article), so diameter is small and bounded rounds suffice. Each
 round is one shuffle: an equi-join of the label relation with the
 edge relation on the node key followed by a min-aggregate — both
 hash-partitioned on node id, no skew beyond a cluster's degree.
-Between rounds the label relation is persisted and the previous one
-released, truncating lineage so round N does not replay rounds
-1..N-1.
-Convergence is one count-aggregate per round over the rows whose
-label changed — type-agnostic (string or numeric node ids), one
-scalar driver action, never a data-sized collect."""
+Each round's label relation is localCheckpointed and the previous
+one released, truncating lineage so round N does not replay rounds
+1..N-1. Convergence is one count-aggregate per round over the rows
+whose label changed — type-agnostic (string or numeric node ids),
+one scalar driver action, never a data-sized collect."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+# dedup_clusters labels the pair graph on the driver while it has at
+# most this many pairs: two int64 id columns, about 16 MB before the
+# numpy temporaries (SCALE.md has the measured driver peak).
+CC_LOCAL_MAX_EDGES = 1 << 20
 
 
 def connected_components(pairs: DataFrame, src: str = "doc_a",
@@ -55,15 +64,16 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct()
-        .persist()
     )
-    cached = (
-        edges.select(F.col("u").alias("node")).distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    labels = cached
+    cached = None
     try:
+        edges.persist()
+        cached = (
+            edges.select(F.col("u").alias("node")).distinct()
+            .withColumn("label", F.col("node"))
+            .localCheckpoint(eager=True)
+        )
+        labels = cached
         for _ in range(max_rounds):
             # Min label among self + neighbors; per-node labels are
             # non-increasing in the column's ordering, so "no row
@@ -107,7 +117,8 @@ def connected_components(pairs: DataFrame, src: str = "doc_a",
         raise RuntimeError(
             f"connected_components did not converge in {max_rounds} rounds")
     finally:
-        _release_local_checkpoint(cached)
+        if cached is not None:
+            _release_local_checkpoint(cached)
         edges.unpersist()
 
 
@@ -118,15 +129,51 @@ def dedup_clusters(pairs: DataFrame, src: str = "doc_a",
     under the id column's natural ordering) and the cluster size.
     ``(doc_id, component_id, component_size)``, non-singleton
     components only (singletons never appear in a pair, hence carry
-    no dedup decision)."""
-    comp = connected_components(pairs, src, dst)
-    sizes = comp.groupBy("component_id").agg(
-        F.count("*").cast("bigint").alias("component_size"))
-    return (
-        comp.join(sizes, "component_id")
-        .select(F.col("node").alias("doc_id"), "component_id",
-                "component_size")
-    )
+    no dedup decision). The id columns keep the pair columns' type.
+
+    One Arrow collect of at most ``CC_LOCAL_MAX_EDGES + 1`` pairs both
+    measures the graph and fetches it. Within the bound the components
+    are labelled on the driver and returned through
+    ``session.local_frame`` (a LocalRelation below Spark's Arrow
+    local-relation threshold, so reading the result runs no Spark
+    job); ``np.unique`` sorts ids in Spark's order (numeric for
+    numbers, code point — UTF-8 byte order — for strings), so the
+    representatives are the ones ``connected_components`` picks. Pairs
+    with a null end are not edges. Past the bound the distributed
+    ``connected_components`` loop runs, computing the pairs again."""
+    import numpy as np
+    import pyarrow as pa
+
+    from project_2_semantic_similarity_spark.session import local_frame
+
+    fetched = pairs.select(src, dst).limit(CC_LOCAL_MAX_EDGES + 1).toArrow()
+    if fetched.num_rows > CC_LOCAL_MAX_EDGES:
+        comp = connected_components(pairs, src, dst)
+        sizes = comp.groupBy("component_id").agg(
+            F.count("*").cast("bigint").alias("component_size"))
+        return (
+            comp.join(sizes, "component_id")
+            .select(F.col("node").alias("doc_id"), "component_id",
+                    "component_size")
+        )
+    fetched = fetched.drop_null()
+    ids = pa.chunked_array(
+        fetched.column(0).chunks + fetched.column(1).chunks,
+        fetched.schema.field(0).type)
+    _, first, inv = np.unique(ids.to_numpy(), return_index=True,
+                              return_inverse=True)
+    m = fetched.num_rows
+    lab = min_label_components(inv[:m], inv[m:], first.size)
+    a, b = pairs.schema[src], pairs.schema[dst]
+    nullable = a.nullable or b.nullable
+    schema = StructType([
+        StructField("doc_id", a.dataType, nullable),
+        StructField("component_id", a.dataType, nullable),
+        StructField("component_size", LongType(), False)])
+    return local_frame(pairs.sparkSession, pa.table([
+        ids.take(first), ids.take(first[lab]),
+        np.bincount(lab, minlength=first.size)[lab]],
+        names=schema.names), schema)
 
 
 def pagerank_weighted(wedges: DataFrame, nodes: DataFrame | None = None,
@@ -163,26 +210,29 @@ def pagerank_weighted(wedges: DataFrame, nodes: DataFrame | None = None,
     nodes = nodes.persist()
     ranks = nodes.withColumn("rank", F.lit(1.0))
     prev = None
-    for _ in range(n_iters):
-        ranks = (
-            wedges.join(ranks, F.col("src") == F.col("node"))
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("w")).alias("contrib"))
-            .select(
-                F.col("dst").alias("node"),
-                (F.lit(reset) + F.lit(damping) * F.col("contrib"))
-                .alias("rank"))
-        ).persist()
-        ranks.count()  # materialize before releasing the parent round
+    try:
+        for _ in range(n_iters):
+            ranks = (
+                wedges.join(ranks, F.col("src") == F.col("node"))
+                .groupBy("dst")
+                .agg(F.sum(F.col("rank") * F.col("w")).alias("contrib"))
+                .select(
+                    F.col("dst").alias("node"),
+                    (F.lit(reset) + F.lit(damping) * F.col("contrib"))
+                    .alias("rank"))
+            ).persist()
+            ranks.count()  # materialize before releasing the parent round
+            if prev is not None:
+                prev.unpersist()
+            prev = ranks
+        return ranks.localCheckpoint(eager=True)
+    finally:
+        # ranks is the last round, or the round that raised
+        ranks.unpersist()
         if prev is not None:
             prev.unpersist()
-        prev = ranks
-    result = ranks.localCheckpoint(eager=True)
-    if prev is not None:
-        prev.unpersist()
-    wedges.unpersist()
-    nodes.unpersist()
-    return result
+        wedges.unpersist()
+        nodes.unpersist()
 
 
 def connected_components_star(pairs: DataFrame, src: str = "doc_a",
@@ -326,7 +376,7 @@ def hamming_components_np(ids, hashes, max_hamming: int,
     does ~25x less work on real near-dup distributions. Callers gate
     on a MEASURED row count (the vocab_join discipline) so this
     never sees an unbounded corpus; past the gate the distributed
-    banded join + O(diameter) propagation runs unchanged."""
+    banded join runs and ``dedup_clusters`` labels its pairs."""
     import numpy as np
 
     ids = np.asarray(ids, dtype=np.int64)
@@ -410,9 +460,27 @@ def hamming_components_np(ids, hashes, max_hamming: int,
     if ei.size == 0:
         return (np.empty(0, np.int64),) * 3
 
-    # min-label propagation (labels are indices; ids sorted ascending,
-    # so index min == doc_id min) with pointer jumping — converges to
-    # the same fixed point as the distributed O(diameter) loop
+    # labels are indices; ids are sorted ascending, so index min ==
+    # doc_id min
+    lab = min_label_components(ei, ej, n)
+    incident = np.zeros(n, dtype=bool)
+    incident[ei] = True
+    incident[ej] = True
+    node_idx = np.nonzero(incident)[0]
+    comp_idx = lab[node_idx]
+    sizes = np.bincount(comp_idx, minlength=n)
+    return ids[node_idx], ids[comp_idx], sizes[comp_idx].astype(np.int64)
+
+
+def min_label_components(ei, ej, n: int):
+    """Component labels of the undirected graph on nodes ``0..n-1``
+    with edges ``(ei[k], ej[k])``: each node's label is the smallest
+    node index in its component. Min-label propagation with pointer
+    jumping (O(E) per round, about O(log n) rounds) — the same fixed
+    point the distributed O(diameter) loop in
+    ``connected_components`` reaches."""
+    import numpy as np
+
     lab = np.arange(n, dtype=np.int64)
     while True:
         m = np.minimum(lab[ei], lab[ej])
@@ -421,16 +489,8 @@ def hamming_components_np(ids, hashes, max_hamming: int,
         np.minimum.at(nl, ej, m)
         nl = np.minimum(nl, nl[nl])
         if np.array_equal(nl, lab):
-            break
+            return lab
         lab = nl
-
-    incident = np.zeros(n, dtype=bool)
-    incident[ei] = True
-    incident[ej] = True
-    node_idx = np.nonzero(incident)[0]
-    comp_idx = lab[node_idx]
-    sizes = np.bincount(comp_idx, minlength=n)
-    return ids[node_idx], ids[comp_idx], sizes[comp_idx].astype(np.int64)
 
 
 def _verify_slice(np, h, ci_parts, cj_parts, popcount, max_hamming,

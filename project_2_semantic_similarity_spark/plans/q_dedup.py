@@ -457,9 +457,11 @@ FROM comp c JOIN csz s USING (component_id)
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive near-dup CLUSTERS over the exact-Jaccard pair
-    relation (J >= 0.5 on 3-shingles): connected components via
-    iterative min-label propagation (operators/graph.py), then
-    cluster size. This is the consolidation step one-hop suppression
+    relation (J >= 0.5 on 3-shingles): connected components with
+    min-label propagation (operators/graph.py dedup_clusters — on the
+    driver while the pairs fit under ``CC_LOCAL_MAX_EDGES``, as a
+    distributed loop past it), then cluster size. This is the
+    consolidation step one-hop suppression
     (dedup_pipeline) cannot express — chains a~b~c collapse into one
     cluster with one canonical representative (min doc_id), which is
     what a training-data dedup keeps. The oracle reproduces the
@@ -469,10 +471,11 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _jaccard_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components of the exact-Jaccard pair relation, a
-    localCheckpoint-materialized result memoized per corpus snapshot,
-    so dedup_clusters and dedup_transitive_keep don't each re-run the
-    iterative propagation loop."""
+    """Clusters of the exact-Jaccard pair relation, memoized per
+    corpus snapshot, so dedup_clusters and dedup_transitive_keep
+    share one pair build and one labelling. The memoized result is a
+    LocalRelation, or a localCheckpoint past ``CC_LOCAL_MAX_EDGES``
+    pairs; either way it holds no lineage back to the pair join."""
     from project_2_semantic_similarity_spark.operators.graph import (
         dedup_clusters as clusters_op)
 

@@ -1804,9 +1804,10 @@ def dedup_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     chains a~b~c that pairwise suppression cannot see collapse here.
 
     Scale: pixels are gone after the one narrow hash stage; pair
-    discovery is the banded join; propagation is the same
-    O(diameter)-round persist-and-release loop dedup_clusters runs
-    (operators/graph.py), on a pair relation, not the corpus.
+    discovery is the banded join; the components come from
+    dedup_clusters (operators/graph.py) on that pair relation, not
+    the corpus — labelled on the driver while the pairs fit under
+    ``CC_LOCAL_MAX_EDGES``, by the distributed min-label loop past it.
 
     Small-corpus fast path (a ``cache.gate`` probe, memoized per source
     snapshot): under ``HAMMING_LOCAL_MAX`` docs (~2 GB of driver memory
@@ -1815,10 +1816,9 @@ def dedup_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     numpy (operators/graph.py hamming_components_np — provably the same
     answer: the banded join has exact recall, so its pair set is the
     all-pairs set). This corpus's phash graph is pathologically dense
-    (949k real edges from 5k docs), and the distributed pair join +
-    O(diameter) propagation loop paid ~50 Spark jobs per execution where
-    one tiny collect suffices; past the gate the distributed path runs
-    unchanged. Equality of the two paths is pinned in
+    (949k real edges from 5k docs), so the distributed pair join costs
+    far more than one collect of the hashes; past the gate it runs
+    distributed. Equality of the two paths is pinned in
     tests/test_dedup_knn.py."""
     from project_2_semantic_similarity_spark.operators.cache import gate
     from project_2_semantic_similarity_spark.operators.dedup import (

@@ -202,6 +202,11 @@ _CHANGED_THIS_ROUND = frozenset(
         "text_bpe_train",
         "text_bpe_train_bytes",
         "text_wordpiece_tokenize",
+        # Driver-side component labelling: operators/graph.py
+        # dedup_clusters labels pair graphs of at most
+        # CC_LOCAL_MAX_EDGES pairs in numpy. Reached, and listed
+        # above: dedup_clusters, dedup_transitive_keep and the
+        # distributed branch of dedup_phash_clusters.
     }
 )
 # r15 window composition: flagship + 34 r14-debt names above + the

@@ -62,9 +62,10 @@ def get_spark(app_name: str = "project2_semantic_similarity",
 
 
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
-    """DataFrame over driver-held ``rows`` (a sequence of tuples, in
-    ``schema``'s column order; ``schema`` is a DDL string or a
-    StructType). The one way driver-built rows enter a plan.
+    """DataFrame over driver-held ``rows`` (a sequence of tuples, or a
+    ``pyarrow.Table`` of columns, in ``schema``'s column order;
+    ``schema`` is a DDL string or a StructType). The one way
+    driver-built rows enter a plan.
 
     The rows go in as a ``pyarrow.Table`` — Spark's Arrow-table path,
     independent of ``spark.sql.execution.arrow.pyspark.enabled``.
@@ -82,8 +83,11 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     struct = (schema if isinstance(schema, StructType)
               else StructType.fromDDL(schema))
     arrow = to_arrow_schema(struct)
-    cols = list(zip(*rows)) if len(rows) else [()] * len(arrow)
-    table = pa.Table.from_arrays(
-        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
-        schema=arrow)
+    if isinstance(rows, pa.Table):
+        table = rows.rename_columns(arrow.names).cast(arrow)
+    else:
+        cols = list(zip(*rows)) if len(rows) else [()] * len(arrow)
+        table = pa.Table.from_arrays(
+            [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+            schema=arrow)
     return spark.createDataFrame(table, struct)

@@ -1410,10 +1410,11 @@ def test_dedup_phash_clusters_gate_paths_equal(spark, sf_dir,
                                                monkeypatch):
     """Query-level pin for dedup_phash_clusters' measured-count gate:
     the default local path (HAMMING_LOCAL_MAX covers the fixture
-    corpus) and the distributed path (bound forced to 0) must return
-    identical rows — this exercises the gate probe, the toPandas
-    uint64 hand-off and the local_frame schema, not just the
-    hamming_components_np operator."""
+    corpus) and the distributed path (pair join and component loop,
+    both bounds forced to 0) must return identical rows — this
+    exercises the gate probe, the toPandas uint64 hand-off and the
+    local_frame schema, not just the hamming_components_np operator."""
+    from project_2_semantic_similarity_spark.operators import graph
     from project_2_semantic_similarity_spark.plans import q_knn, registry
 
     registry.load_all()
@@ -1422,6 +1423,7 @@ def test_dedup_phash_clusters_gate_paths_equal(spark, sf_dir,
     local = sorted(map(tuple, fn(spark, sf_dir).collect()))
 
     monkeypatch.setattr(q_knn, "HAMMING_LOCAL_MAX", 0)
+    monkeypatch.setattr(graph, "CC_LOCAL_MAX_EDGES", 0)
     dist = sorted(map(tuple, fn(spark, sf_dir).collect()))
 
     assert local and local == dist

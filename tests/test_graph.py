@@ -6,9 +6,11 @@ from __future__ import annotations
 
 import pytest
 
+from project_2_semantic_similarity_spark.operators import graph
 from project_2_semantic_similarity_spark.operators.graph import (
     connected_components,
     dedup_clusters,
+    pagerank_weighted,
 )
 
 
@@ -53,6 +55,107 @@ def test_raises_rather_than_partial_labeling(spark):
     pairs = spark.createDataFrame(chain, "doc_a long, doc_b long")
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(pairs, max_rounds=2)
+
+
+@pytest.mark.parametrize("rows, ddl", [
+    ([(10, 2), (10, 30), (7, 5), (1, 2), (2, 3), (3, 4), (9, 8)],
+     "doc_a long, doc_b long"),
+    ([("2", "10"), ("10", "30"), ("x", "y"), ("é", "z")],
+     "doc_a string, doc_b string"),
+    ([], "doc_a long, doc_b long"),
+], ids=["numeric_chain", "string_ids", "empty"])
+def test_dedup_clusters_local_matches_distributed(
+        spark, monkeypatch, rows, ddl):
+    """The driver-side labelling must answer exactly as the
+    distributed min-label loop does: same nodes, same representative
+    under the column's ordering ('10' < '2' for strings, code point
+    order past ASCII), same sizes, same schema — also with no pairs."""
+    pairs = spark.createDataFrame(rows, ddl)
+    local = dedup_clusters(pairs)
+    assert local._jdf.queryExecution().optimizedPlan().nodeName() \
+        == "LocalRelation"
+    monkeypatch.setattr(graph, "CC_LOCAL_MAX_EDGES", 0)
+    dist = dedup_clusters(pairs)
+    assert local.schema == dist.schema
+    got = sorted(map(tuple, local.collect()))
+    assert got == sorted(map(tuple, dist.collect()))
+    assert bool(got) == bool(rows)
+
+
+def test_dedup_clusters_jobs_cold_and_warm(spark, sf_dir,
+                                           run_counting_jobs):
+    """The corpus's near-dup pair graph is labelled on the driver: a
+    cold plan build + collect of dedup_clusters runs the shingle and
+    pair jobs plus one collect, and a warm one reads its memoized
+    LocalRelation with no job at all."""
+    from project_2_semantic_similarity_spark.operators.cache import (
+        clear_slots)
+    from project_2_semantic_similarity_spark.plans.registry import (
+        QUERIES, load_all)
+
+    load_all()
+    clear_slots()
+
+    def run():
+        return sorted(map(tuple, QUERIES["dedup_clusters"](
+            spark, sf_dir).collect()))
+
+    cold, cold_jobs = run_counting_jobs("dedup-clusters-cold", run)
+    warm, warm_jobs = run_counting_jobs("dedup-clusters-warm", run)
+    assert cold and warm == cold
+    assert cold_jobs <= 15
+    assert warm_jobs == 0
+
+
+def _fail_on_call(monkeypatch, cls, name, call, before):
+    """Make ``cls.name`` run ``before(self)`` and then raise on its
+    ``call``-th call (1-based); other calls run the real method."""
+    real = getattr(cls, name)
+    calls = []
+
+    def fake(self, *args, **kwargs):
+        calls.append(1)
+        if len(calls) == call:
+            before(self)
+            raise RuntimeError("injected failure")
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, name, fake)
+
+
+def test_connected_components_releases_edges_when_first_checkpoint_fails(
+        spark, monkeypatch):
+    """If the first label checkpoint raises after its input (the
+    persisted edge relation) was materialized, the edges must still be
+    released."""
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4)], "doc_a long, doc_b long")
+    before = len(sc._jsc.getPersistentRDDs())
+    _fail_on_call(monkeypatch, type(pairs), "localCheckpoint", 1,
+                  before=lambda df: df.count())
+    with pytest.raises(RuntimeError, match="injected failure"):
+        connected_components(pairs)
+    monkeypatch.undo()
+    assert len(sc._jsc.getPersistentRDDs()) == before
+
+
+def test_pagerank_releases_every_round_when_a_round_fails(
+        spark, monkeypatch):
+    """A round that raises after materializing its ranks must not leak
+    the edge, node or rank relations."""
+    sc = spark.sparkContext
+    wedges = spark.createDataFrame(
+        [(1, 2, 1.0), (2, 3, 0.5), (2, 1, 0.5), (3, 2, 1.0)],
+        "src long, dst long, w double")
+    before = len(sc._jsc.getPersistentRDDs())
+    real_count = type(wedges).count
+    _fail_on_call(monkeypatch, type(wedges), "count", 2,
+                  before=real_count)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        pagerank_weighted(wedges, n_iters=3)
+    monkeypatch.undo()
+    assert len(sc._jsc.getPersistentRDDs()) == before
 
 
 def test_keyed_persist_slot_is_session_scoped(spark):
