@@ -327,11 +327,12 @@ def stage(spark, sf_dir: str) -> float:
         ensure_minhash_variant)
 
     ensure_minhash_variant(spark, sf_dir)
-    # IVF/PQ index artifacts (label centroids, inverted-list
-    # assignment, PQ code table — the keyed_persist slots knn_ivf_pq
-    # queries against): index BUILD is one-time per corpus snapshot,
-    # not part of any query's timing; one staged execution
-    # materializes all three slots.
+    # knn_ivf_pq's per-snapshot index: the shared vector fetch of a
+    # driver-sized table (slot vectors_local), or past
+    # VEC_LOCAL_MAX_ROWS the label centroids, inverted-list
+    # assignment and PQ code table slots. Index BUILD is one-time per
+    # corpus snapshot, not part of any query's timing; one staged
+    # execution materializes it.
     from project_2_semantic_similarity_spark.plans.q_knn import (
         knn_ivf_pq)
 

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import math
 from collections.abc import Hashable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -224,6 +225,8 @@ def _unit_codebook(rows):
 
     rows = sorted((int(lbl), [float(x) for x in v]) for lbl, v in rows)
     labels = np.array([lbl for lbl, _ in rows], dtype=np.int64)
+    if not rows:  # an empty table trains an empty codebook
+        return labels, np.zeros((0, 0))
     return labels, _unit_rows(np.array([v for _, v in rows],
                                        dtype=np.float64))
 
@@ -474,6 +477,8 @@ def _candidate_pairs_local(assigned: DataFrame, centroids: DataFrame,
                         np.asarray(r["centroid"], dtype=np.float64))
                        for r in centroids.collect()
                        if int(r["label"]) in radii)
+        if not cents:  # no vectors were assigned
+            return []
         labels = np.array([lbl for lbl, _ in cents], dtype=np.int64)
         cmat = np.array([v for _, v in cents], dtype=np.float64)
         nrm = np.linalg.norm(cmat, axis=1, keepdims=True)
@@ -1147,7 +1152,8 @@ def kmeans_codebook(embeddings: DataFrame, k: int = 8, iters: int = 5,
                     id_col: str = "vec_id",
                     vec_col: str = "embedding",
                     fit_sample_max: int | None = None,
-                    cache_key: Hashable = None) -> DataFrame:
+                    cache_key: Hashable = None,
+                    n_rows: int | None = None) -> DataFrame:
     """The TRAINED centroids themselves, ``(label, centroid)`` — the
     codebook ``knn_ivf`` / ``cosine_pairs_blocked`` consume. The
     returned DataFrame is a LocalRelation over k driver-held rows —
@@ -1162,7 +1168,8 @@ def kmeans_codebook(embeddings: DataFrame, k: int = 8, iters: int = 5,
     family of operators/dedup.py, so a SQL oracle can re-derive the
     exact sample and therefore the exact trained codebook). Only the
     FIT is sampled; callers assign the full relation against the
-    result."""
+    result. ``n_rows``: the relation's row count, when the caller
+    already holds it, so the sample denominator costs no count job."""
     from project_2_semantic_similarity_spark.operators.dedup import (
         portable_hash60)
 
@@ -1171,7 +1178,7 @@ def kmeans_codebook(embeddings: DataFrame, k: int = 8, iters: int = 5,
     def fit_rows() -> list[tuple]:
         fit = embeddings
         if fit_sample_max is not None:
-            n = embeddings.count()
+            n = embeddings.count() if n_rows is None else n_rows
             if n > fit_sample_max:
                 denom = -(-n // fit_sample_max)  # ceil
                 fit = embeddings.where(
@@ -1305,12 +1312,17 @@ def pq_knn(embeddings: DataFrame, query_vec_id: int, k: int,
     skip the index build entirely, the materialize-once-query-many
     shape a vector index has in production.
     """
-    unit = embeddings.select(
-        id_col,
-        F.transform(vec_col,
-                    lambda x: F.try_divide(x.cast("double"),
-                                           l2_norm(vec_col))).alias("uv"),
-    ).where(l2_norm(vec_col) > 0)
+    # The norm enters the division through array_repeat, outside any
+    # lambda: a norm referenced inside transform's lambda is folded
+    # once per element once Catalyst inlines the projection.
+    nrm = F.col("__nrm")
+    unit = (
+        embeddings.select(id_col, vec_col, l2_norm(vec_col).alias("__nrm"))
+        .where(nrm > 0)
+        .select(id_col, F.zip_with(
+            vec_col, F.array_repeat(nrm, F.size(vec_col)),
+            lambda x, n: F.try_divide(x.cast("double"), n)).alias("uv"))
+    )
     spark = embeddings.sparkSession
 
     seeds = keyed_value(
@@ -1370,3 +1382,257 @@ def pq_knn(embeddings: DataFrame, query_vec_id: int, k: int,
                     cosine_similarity(vec_col, "__qvec").alias("cosine"),
                     "adc")
             .orderBy(F.desc("cosine"), F.asc(id_col)).limit(k))
+
+
+# ------------------------------------------------------------------
+# Driver-sized tables: one bounded Arrow fetch per snapshot decides the
+# branch and brings the vectors; numpy does the search; past the bound
+# the distributed operators above run unchanged.
+
+# Row bound of ``vectors_local``: 4 MB of float32 at dim 64.
+VEC_LOCAL_MAX_ROWS = 1 << 14
+# ``cosine_pairs_local`` drops its result past this many pairs.
+COSINE_LOCAL_MAX_PAIRS = 1 << 20
+# float64 bytes one row block of ``cosine_pairs_local`` holds: its
+# cosine block and the norm product that block is divided by.
+_COSINE_BLOCK_BYTES = 8 << 20
+
+
+class LocalVectors(NamedTuple):
+    """An embeddings table on the driver, in fetch order: unique
+    integer ``ids``, integer ``labels`` and the finite n×dim matrix
+    ``x`` in the column's float type."""
+
+    ids: object
+    labels: object
+    x: object
+
+
+def vectors_local(embeddings: DataFrame, cache_key: Hashable,
+                  id_col: str = "vec_id", label_col: str = "label",
+                  vec_col: str = "embedding") -> LocalVectors | None:
+    """The table as ``LocalVectors`` when the driver kernels can take
+    it, else None, and the caller runs its distributed path.
+
+    One pass decides and fetches:
+    ``select(id, label, vector).limit(VEC_LOCAL_MAX_ROWS + 1).toArrow()``
+    reads at most one row past the bound, so a huge table costs a
+    bounded scan. A table the kernels do not model also answers None:
+    a null anywhere, a non-integer id or label, a repeated id, ragged
+    or non-finite vectors. The answer is memoized in slot
+    ``vectors_local`` under ``(cache_key, columns, bound)``, so the
+    vector queries of one snapshot share a single fetch;
+    ``cache_key=None`` fetches on every call."""
+
+    def fetch() -> LocalVectors | None:
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        t = (embeddings.select(id_col, label_col, vec_col)
+             .limit(VEC_LOCAL_MAX_ROWS + 1).toArrow())
+        if t.num_rows > VEC_LOCAL_MAX_ROWS:
+            return None
+        ids, labels, vecs = (c.combine_chunks() for c in t.columns)
+        if (ids.null_count or labels.null_count or vecs.null_count
+                or not pa.types.is_integer(ids.type)
+                or not pa.types.is_integer(labels.type)
+                or not pa.types.is_floating(vecs.type.value_type)):
+            return None
+        lens = pc.list_value_length(vecs).to_numpy()
+        dim = int(lens[0]) if len(lens) else 0
+        flat = vecs.flatten()
+        ids = ids.to_numpy()
+        if (flat.null_count or (lens != dim).any()
+                or np.unique(ids).size != ids.size):
+            return None
+        x = flat.to_numpy().reshape(ids.size, dim)
+        if not np.isfinite(x).all():
+            return None
+        return LocalVectors(ids, labels.to_numpy(), x)
+
+    return keyed_value(
+        "vectors_local",
+        None if cache_key is None
+        else (cache_key, id_col, label_col, vec_col, VEC_LOCAL_MAX_ROWS),
+        fetch)
+
+
+def cosine_pairs_local(embeddings: DataFrame, min_cosine: float,
+                       cache_key: Hashable = None,
+                       id_col: str = "vec_id", label_col: str = "label",
+                       vec_col: str = "embedding") -> DataFrame | None:
+    """``cosine_pairs_blocked_gemm``'s pairs, every ``(vec_a, vec_b,
+    cosine)`` with vec_a < vec_b and cosine > ``min_cosine``, computed
+    on the driver from ``vectors_local`` and returned through
+    ``session.local_frame``. None when the table is not driver-sized
+    or the pairs pass ``COSINE_LOCAL_MAX_PAIRS``; the caller then runs
+    the distributed join.
+
+    Exact all-pairs with the gemm kernel's cosine, ``(m1 @ m2.T) /
+    outer(n1, n2)`` in float64, where a non-finite value (a zero-norm
+    vector) never passes. The rows are sorted by id and each block of
+    rows is scored against itself and every later row, the block's
+    float64 buffers held to ``_COSINE_BLOCK_BYTES``."""
+    import numpy as np
+    import pyarrow as pa
+
+    vecs = vectors_local(embeddings, cache_key, id_col, label_col, vec_col)
+    if vecs is None:
+        return None
+    order = np.argsort(vecs.ids)
+    ids = vecs.ids[order]
+    m = vecs.x[order].astype(np.float64)
+    nrm = np.linalg.norm(m, axis=1)
+    n = ids.size
+    step = max(1, _COSINE_BLOCK_BYTES // (16 * max(n, 1)))
+    out_a, out_b, out_c, total = [ids[:0]], [ids[:0]], [np.zeros(0)], 0
+    for r0 in range(0, n, step):
+        cos = m[r0:r0 + step] @ m[r0:].T
+        with np.errstate(divide="ignore", invalid="ignore"):
+            np.divide(cos, np.outer(nrm[r0:r0 + step], nrm[r0:]), out=cos)
+            ia, ib = np.nonzero(np.isfinite(cos) & (cos > min_cosine))
+        keep = ia < ib  # row r0+ia against row r0+ib: ids ascend
+        ia, ib = ia[keep], ib[keep]
+        total += ia.size
+        if total > COSINE_LOCAL_MAX_PAIRS:
+            return None
+        out_a.append(ids[r0 + ia])
+        out_b.append(ids[r0 + ib])
+        out_c.append(cos[ia, ib])
+    id_type = dict(embeddings.dtypes)[id_col]
+    return local_frame(
+        embeddings.sparkSession,
+        pa.table([np.concatenate(out_a), np.concatenate(out_b),
+                  np.concatenate(out_c)], names=["vec_a", "vec_b", "cosine"]),
+        f"vec_a {id_type}, vec_b {id_type}, cosine double")
+
+
+def _fold_dot(a, b):
+    """``functions.dot`` in numpy over the last axis (leading axes
+    broadcast): float64 products added left to right onto 0.0, the
+    order of Spark's ``aggregate`` fold, where ``np.sum`` or BLAS may
+    round differently in the last bit."""
+    import numpy as np
+
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    for j in range(a.shape[-1]):
+        acc = acc + a[..., j] * b[..., j]
+    return acc
+
+
+def _fold_cosine(a, b, na, nb):
+    """``functions.cosine_similarity`` from the operands' norms: NaN
+    stands for its NULL, where ``try_divide`` meets a zero product."""
+    import numpy as np
+
+    den = na * nb
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(den == 0, np.nan, _fold_dot(a, b) / den)
+
+
+def _top(score, ids, n: int):
+    """Indices of the first ``n`` entries ordered by NULL (NaN) last,
+    then ``score`` descending, then ``ids`` ascending."""
+    import numpy as np
+
+    null = np.isnan(score)
+    return np.lexsort((ids, np.where(null, 0.0, -score), null))[:n]
+
+
+def _ivf_members(labels, x, nrm, qi: int, nprobe: int):
+    """knn_ivf_pq's IVF stage: whether each row of ``x`` sits in one
+    of the ``nprobe`` inverted lists nearest to row ``qi``. The lists
+    are ``label_centroids`` (label means, each summed in row order);
+    ``ivf_assign`` puts a row in the list of a NULL cosine if it has
+    one (its ``min_by`` orders a NULL ``-ccos`` first), else of the
+    highest cosine, the lowest label winning ties; the probe ranks
+    lists by the query's cosine with ``_top``."""
+    import numpy as np
+
+    lab, inv = np.unique(labels, return_inverse=True)
+    cents = np.zeros((lab.size, x.shape[1]))
+    np.add.at(cents, inv, x)
+    cents /= np.bincount(inv)[:, None]
+    cnrm = np.sqrt(_fold_dot(cents, cents))
+    ccos = _fold_cosine(x[:, None, :], cents[None, :, :],
+                        nrm[:, None], cnrm[None, :])
+    null = np.isnan(ccos)
+    assign = np.where(null.any(axis=1), null.argmax(axis=1),
+                      np.where(null, -np.inf, ccos).argmax(axis=1))
+    probed = _top(_fold_cosine(cents, x[qi], cnrm, nrm[qi]), lab, nprobe)
+    return np.isin(assign, probed)
+
+
+def pq_knn_local(embeddings: DataFrame, query_vec_id: int, k: int,
+                 m_sub: int = 8, sub_dim: int = 8, k_sub: int = 16,
+                 cand_mult: int = 8, nprobe: int | None = None,
+                 cache_key: Hashable = None, id_col: str = "vec_id",
+                 label_col: str = "label",
+                 vec_col: str = "embedding") -> DataFrame | None:
+    """``pq_knn``'s ``(id, cosine, adc)`` rows computed on the driver
+    from ``vectors_local`` and returned through ``session.local_frame``
+    in rank order. None when the table is not driver-sized or holds
+    the query with vectors shorter than ``m_sub * sub_dim``; the
+    caller then runs ``pq_knn``.
+
+    ``nprobe`` puts knn_ivf_pq's IVF stage in front
+    (``_ivf_members``): only the members of the query's ``nprobe``
+    nearest label-centroid lists are ADC candidates. Without it every
+    vector but the query is one, as in ``pq_knn``.
+
+    The steps keep the distributed plan's arithmetic and order: norms,
+    dot products and cosines are Spark's left folds (``_fold_dot``);
+    the seeds are the ``k_sub`` unit vectors with the lowest
+    ``(md5(str(id)), id)``; a subvector's code is its nearest seed
+    slice by d², ties to the lowest code; the ADC sum adds the
+    subspaces in order; the top ``k * cand_mult`` by ADC and then the
+    top ``k`` by exact cosine are cut with ``_top``. A query that is
+    missing or has zero norm gives no rows, as in ``pq_knn``."""
+    import hashlib
+
+    import numpy as np
+    import pyarrow as pa
+
+    vecs = vectors_local(embeddings, cache_key, id_col, label_col, vec_col)
+    if vecs is None:
+        return None
+    spark = embeddings.sparkSession
+    schema = (f"{id_col} {dict(embeddings.dtypes)[id_col]}, "
+              "cosine double, adc double")
+    hit = np.flatnonzero(vecs.ids == query_vec_id)
+    width = m_sub * sub_dim
+    if hit.size and vecs.x.shape[1] < width:
+        return None
+    x = vecs.x.astype(np.float64)
+    nrm = np.sqrt(_fold_dot(x, x))
+    if not hit.size or nrm[hit[0]] == 0:
+        return local_frame(spark, [], schema)
+    qi = hit[0]
+    unit = np.divide(x, nrm[:, None], out=np.zeros_like(x),
+                     where=nrm[:, None] > 0)
+    urows = np.flatnonzero(nrm > 0)
+    ids = vecs.ids.tolist()
+    seeds = sorted(urows.tolist(), key=lambda r: (
+        hashlib.md5(str(ids[r]).encode()).hexdigest(), ids[r]))[:k_sub]
+    cv = unit[seeds, :width].reshape(len(seeds), m_sub, sub_dim)
+    cand = (nrm > 0) & (vecs.ids != query_vec_id)
+    if nprobe is not None:
+        cand &= _ivf_members(vecs.labels, x, nrm, qi, nprobe)
+    rows = np.flatnonzero(cand)
+    sv = unit[rows, :width].reshape(rows.size, m_sub, sub_dim)
+    qsv = unit[qi, :width].reshape(m_sub, sub_dim)
+    adc = np.zeros(rows.size)
+    for m in range(m_sub):
+        d2 = np.zeros((rows.size, len(seeds)))
+        for j in range(sub_dim):
+            diff = sv[:, m, j, None] - cv[None, :, m, j]
+            d2 = d2 + diff * diff
+        adc = adc + _fold_dot(qsv[m], cv[:, m])[np.argmin(d2, axis=1)]
+    top = _top(adc, vecs.ids[rows], k * cand_mult)
+    rows, adc = rows[top], adc[top]
+    cos = _fold_cosine(x[rows], x[qi], nrm[rows], nrm[qi])
+    best = _top(cos, vecs.ids[rows], k)
+    return local_frame(spark, pa.table(
+        [vecs.ids[rows[best]], pa.array(cos[best], mask=np.isnan(cos[best])),
+         adc[best]], names=[id_col, "cosine", "adc"]), schema)

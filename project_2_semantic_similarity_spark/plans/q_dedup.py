@@ -20,18 +20,10 @@ from project_2_semantic_similarity_spark.operators.cache import (
 from project_2_semantic_similarity_spark.plans.registry import query
 from project_2_semantic_similarity_spark.session import local_frame
 from project_2_semantic_similarity_spark.sources import load_table
+from project_2_semantic_similarity_spark.sources.tables import table_key
 
 _SHINGLE_N = 3
 _JACCARD_MIN = 0.5
-
-
-def _table_key(sf_dir: str, name: str) -> tuple[str, str, str]:
-    """Cache identity (path + content fingerprint) of one testdata
-    table, for persisted-slot reuse and probe-decision caching."""
-    from project_2_semantic_similarity_spark.sources.tables import (
-        source_fingerprint)
-
-    return (sf_dir, name, source_fingerprint(sf_dir, name))
 
 
 def _corpus_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -48,7 +40,7 @@ def _corpus_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (checkpointed once per snapshot), exactly the SCALE.md shape."""
     docs = load_table(spark, sf_dir, "documents")
     return keyed_persist(
-        "dd_shingles3", _table_key(sf_dir, "documents"),
+        "dd_shingles3", table_key(sf_dir, "documents"),
         lambda: D.shingles(docs, _SHINGLE_N))
 
 
@@ -480,7 +472,7 @@ def _jaccard_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_clusters as clusters_op)
 
     return keyed_value(
-        "dd_jaccard_clusters", _table_key(sf_dir, "documents"),
+        "dd_jaccard_clusters", table_key(sf_dir, "documents"),
         lambda: clusters_op(D.jaccard_pairs(
             _corpus_shingles(spark, sf_dir), _JACCARD_MIN)))
 
@@ -619,7 +611,7 @@ def ensure_minhash_variant(spark: SparkSession, sf_dir: str,
     per corpus snapshot: the probe is one narrow scan aggregate, run
     once per snapshot instead of once per execution."""
     return keyed_value(
-        "dd_minhash_variant", _table_key(sf_dir, "documents"),
+        "dd_minhash_variant", table_key(sf_dir, "documents"),
         lambda: D.probe_minhash_variant(
             load_table(spark, sf_dir, "documents") if docs is None
             else docs))
@@ -719,7 +711,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingles/doc): one narrow scan aggregate instead of a groupBy
     # over the exploded shingle relation — and cached per corpus
     # fingerprint, so repeated calls don't re-scan at all.
-    key = _table_key(sf_dir, "documents")
+    key = table_key(sf_dir, "documents")
     variant = ensure_minhash_variant(spark, sf_dir, docs)
     # Persist the signature table (replacement slot, keyed on the
     # corpus fingerprint): it is tiny (n_docs x 64 ints, ~3 orders of
@@ -799,7 +791,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 60-vote-aggregate build ran twice per execution (and again per
     # warm pass) for a snapshot-determined n_docs×16-byte relation.
     fp = keyed_persist(
-        "dd_simhash60", _table_key(sf_dir, "documents"),
+        "dd_simhash60", table_key(sf_dir, "documents"),
         lambda: D.simhash(docs, bits=60, hash_family="portable"))
     return D.simhash_near_pairs(fp, max_hamming=8, bits=60)
 
@@ -817,13 +809,15 @@ def _trained_codebook(spark: SparkSession,
 
     def fit() -> tuple[int, list]:
         e = load_table(spark, sf_dir, "embeddings")
-        k = max(8, min(256, int(e.count() ** 0.5)))
+        n = e.count()
+        k = max(8, min(256, int(n ** 0.5)))
         return k, [(int(r.label), [float(x) for x in r.centroid])
                    for r in kmeans_codebook(
-                       e, k=k, iters=2, fit_sample_max=4096).collect()]
+                       e, k=k, iters=2, fit_sample_max=4096,
+                       n_rows=n).collect()]
 
     k, rows = keyed_value("dd_trained_codebook",
-                          _table_key(sf_dir, "embeddings"), fit)
+                          table_key(sf_dir, "embeddings"), fit)
     return local_frame(spark, rows, _CODEBOOK_SCHEMA), k
 
 
@@ -838,42 +832,40 @@ WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) > 0.4
 """,
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs (cos > 0.45), via EXACT
-    metric blocking with the per-pair cosine as one BLAS matmul per
-    candidate cluster pair (operators/similarity.py
-    cosine_pairs_blocked_gemm, Arrow mapInPandas): nearest-centroid
-    assignment → per-cluster angular radii → triangle-inequality
-    cluster-pair pruning → block-pair matmul → exact cosine filter.
-    Same results as the naive all-pairs join at every scale (pruning
-    is provably lossless); the r4 VERDICT promoted this engine to
-    the declared query — the interpreted-fold twin
-    (``dedup_embedding_cosine_fold``) computes identical pairs at 2×
-    the wall (both hash-matched the same oracle in CORRECTNESS_r04,
-    equality further pinned in tests/test_dedup_knn.py).
+    """Embedding-cosine near-dup pairs (cos > 0.45), exact, on one of
+    two branches with the same rows.
 
-    Blocks on a TRAINED k-means codebook (k ≈ √n, the IVF rule of
-    thumb; trained once per corpus snapshot) rather than the 10
-    label centroids. Honest accounting from measurement: at this
-    LOOSE threshold (cos > 0.45 ⇒ θ_t ≈ 63°) the triangle inequality
-    prunes nothing on this corpus — the clusters are not separated
-    enough — so the plan degenerates to an evenly-bucketed all-pairs
-    block matmul, which is precisely the right execution for an
-    exact all-pairs query (k² uniform tasks, no NLJ, no hot key).
-    The pruning engages as θ_t tightens (cos 0.9 prunes most pairs —
-    pinned in tests/test_dedup_knn.py)."""
+    A driver-sized table (``similarity.VEC_LOCAL_MAX_ROWS``) takes
+    ``cosine_pairs_local``: the snapshot's vectors are fetched once
+    through Arrow (shared with the kNN queries over the same
+    snapshot) and all pairs are scored on the driver in row blocks,
+    so no codebook fit, assignment or block shuffle runs. Past the
+    row bound, or past ``COSINE_LOCAL_MAX_PAIRS`` pairs, the
+    distributed ``cosine_pairs_blocked_gemm`` runs: nearest-centroid
+    assignment on a trained k-means codebook (k ≈ √n, fit once per
+    snapshot), per-cluster angular radii, triangle-inequality
+    cluster-pair pruning (provably lossless), then one BLAS matmul
+    per candidate cluster pair in an Arrow ``mapInPandas``. At this
+    loose threshold (θ_t ≈ 63°) the pruning keeps every cluster pair
+    on this corpus, so that branch is an evenly bucketed all-pairs
+    block matmul; it prunes as the threshold tightens (pinned in
+    tests/test_dedup_knn.py). ``dedup_embedding_cosine_fold`` is the
+    same blocking with Column-expression folds."""
     from project_2_semantic_similarity_spark.operators.similarity import (
         cosine_pairs_blocked_gemm,
+        cosine_pairs_local,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
-    codebook, _k = _trained_codebook(spark, sf_dir)
-    # codebook_key: the trained codebook is fully determined by the
-    # corpus fingerprint (already in cache_key) and its 2 fit
-    # iterations — passing the durable identity skips the operator's
-    # collect probe per call
-    pairs = cosine_pairs_blocked_gemm(
-        e, 0.45, codebook, cache_key=_table_key(sf_dir, "embeddings"),
-        codebook_key=("trained", 2))
+    key = table_key(sf_dir, "embeddings")
+    pairs = cosine_pairs_local(e, 0.45, cache_key=key)
+    if pairs is None:
+        codebook, _k = _trained_codebook(spark, sf_dir)
+        # codebook_key: the trained codebook is fully determined by
+        # the corpus fingerprint (already in cache_key) and its 2 fit
+        # iterations; the durable identity skips the collect probe
+        pairs = cosine_pairs_blocked_gemm(
+            e, 0.45, codebook, cache_key=key, codebook_key=("trained", 2))
     return pairs.select(
         "vec_a", "vec_b", F.round("cosine", 6).alias("cosine"))
 
@@ -912,7 +904,7 @@ def dedup_embedding_cosine_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unrolls the per-pair dot into codegen (r15); rows of any other
     # size fall back to the identical fold expression.
     pairs = cosine_pairs_blocked(e, 0.45, codebook, salt_buckets=salt,
-                                 cache_key=_table_key(sf_dir, "embeddings"),
+                                 cache_key=table_key(sf_dir, "embeddings"),
                                  codebook_key=("trained", 2), dim=64)
     return pairs.select(
         "vec_a", "vec_b", F.round("cosine", 6).alias("cosine"))

@@ -11,6 +11,8 @@ from project_2_semantic_similarity_spark.operators import similarity as S
 from project_2_semantic_similarity_spark.plans.registry import query
 from project_2_semantic_similarity_spark.session import local_frame
 from project_2_semantic_similarity_spark.sources import load_table
+from project_2_semantic_similarity_spark.sources.tables import (
+    source_fingerprint, table_key)
 
 _QUERY_VEC_ID = 0
 _K = 10
@@ -640,23 +642,30 @@ LIMIT {_K}
 """,
 )
 def knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN top-10 (operators/similarity.py
-    pq_knn — Jégou et al. PQ/ADC): unit-normalize, slice into 8
-    subspaces of 8 dims, snap each subvector to a 16-entry seeded-
-    sample sub-codebook, rank all vectors by the ADC dot product over
-    the 8 small codes, exact-cosine re-rank the top 80. The codebook
-    is the deterministic (md5(id), id)-ordered sample, so the whole
-    approximate pipeline — encode argmin, ADC scan, re-rank — is
-    re-derived end-to-end by the SQL oracle: a FULLY hash-verified
-    PQ index. Recall vs exact kNN is additionally pinned in tests."""
-    from project_2_semantic_similarity_spark.sources.tables import (
-        source_fingerprint)
+    """Product-quantization ANN top-10 (Jégou et al. PQ/ADC):
+    unit-normalize, slice into 8 subspaces of 8 dims, snap each
+    subvector to a 16-entry seeded-sample sub-codebook, rank all
+    vectors by the ADC dot product over the 8 small codes,
+    exact-cosine re-rank the top 80. The codebook is the
+    deterministic (md5(id), id)-ordered sample, so the whole
+    approximate pipeline is re-derived by the SQL oracle. Recall vs
+    exact kNN is pinned in tests.
 
+    A driver-sized table runs the steps in numpy on the snapshot's
+    Arrow-fetched vectors (``similarity.pq_knn_local``, the fetch
+    shared with the other vector queries of the snapshot); a larger
+    one runs the distributed ``similarity.pq_knn`` with its code
+    table slotted per snapshot. Both round in Spark."""
     e = load_table(spark, sf_dir, "embeddings")
-    out = S.pq_knn(e, _QUERY_VEC_ID, _K, m_sub=_PQ_M, sub_dim=_PQ_SD,
-                   k_sub=_PQ_KSUB, cand_mult=_PQ_CMULT,
-                   cache_key=(sf_dir,
-                              source_fingerprint(sf_dir, "embeddings")))
+    out = S.pq_knn_local(e, _QUERY_VEC_ID, _K, m_sub=_PQ_M,
+                         sub_dim=_PQ_SD, k_sub=_PQ_KSUB,
+                         cand_mult=_PQ_CMULT,
+                         cache_key=table_key(sf_dir, "embeddings"))
+    if out is None:
+        out = S.pq_knn(e, _QUERY_VEC_ID, _K, m_sub=_PQ_M, sub_dim=_PQ_SD,
+                       k_sub=_PQ_KSUB, cand_mult=_PQ_CMULT,
+                       cache_key=(sf_dir,
+                                  source_fingerprint(sf_dir, "embeddings")))
     return out.select("vec_id", F.round("cosine", 6).alias("cosine"),
                       F.round("adc", 6).alias("adc_score"))
 
@@ -763,46 +772,53 @@ def knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full IVF-PQ composition (the FAISS billion-scale recipe):
     the query scores the label-centroid codebook, its 3 nearest
     inverted lists are probed, and ONLY their members go through the
-    PQ ADC scan + exact re-rank (operators/similarity.py pq_knn with
-    ``candidates``). Cost per query at scale: n_lists codebook rows
-    + nprobe/n_lists of the CODE table (16x-compressed, partition-
-    pruned when laid out by list_id as sink_ivf_partitioned does) +
-    k*cand_mult float rows for the re-rank. Both approximation
-    stages — list pruning and quantized ranking — stay fully
-    hash-verified because codebook and seeds are deterministic."""
+    PQ ADC scan + exact re-rank. Both approximation stages, list
+    pruning and quantized ranking, stay hash-verified because the
+    codebook and seeds are deterministic.
+
+    A driver-sized table runs every stage in numpy on the snapshot's
+    Arrow-fetched vectors (``similarity.pq_knn_local`` with
+    ``nprobe``; the fetch is shared with dedup_embedding_cosine and
+    knn_pq over the same snapshot). A larger one runs distributed:
+    the centroids, the inverted-list assignment and the PQ code table
+    are slotted per snapshot, so a query pays probe selection, the
+    candidate-restricted ADC scan (``similarity.pq_knn`` with
+    ``candidates``) and the k*cand_mult re-rank; at scale the code
+    table is read partition-pruned by list_id. Both round in
+    Spark."""
     from project_2_semantic_similarity_spark.functions import (
         cosine_similarity)
     from project_2_semantic_similarity_spark.operators.cache import (
         keyed_persist)
-    from project_2_semantic_similarity_spark.sources.tables import (
-        source_fingerprint)
 
     e = load_table(spark, sf_dir, "embeddings")
-    key = (sf_dir, source_fingerprint(sf_dir, "embeddings"))
-    # the three index artifacts (centroids, inverted-list assignment,
-    # PQ code table via pq_knn's cache_key) are built once per corpus
-    # snapshot and slotted — a query pays only probe selection, the
-    # candidate-restricted ADC scan and the k*cand_mult re-rank
-    cents = keyed_persist("ivf_centroids", key,
-                          lambda: S.label_centroids(e))
-    assigned = keyed_persist("ivf_assigned", key,
-                             lambda: S.ivf_assign(e, cents))
-    q = e.where(F.col("vec_id") == _QUERY_VEC_ID).select(
-        F.col("embedding").alias("__qvec"))
-    probe = (cents.crossJoin(F.broadcast(q))
-             .select(F.col("label").alias("__plist"),
-                     cosine_similarity("centroid", "__qvec").alias("__pc"))
-             .orderBy(F.desc("__pc"), F.asc("__plist"))
-             .limit(_IVFPQ_NPROBE)
-             .select("__plist"))
-    cand_ids = (assigned
-                .join(F.broadcast(probe),
-                      F.col("list_id") == F.col("__plist"))
-                .where(F.col("vec_id") != _QUERY_VEC_ID)
-                .select("vec_id"))
-    out = S.pq_knn(e, _QUERY_VEC_ID, _K, m_sub=_PQ_M, sub_dim=_PQ_SD,
-                   k_sub=_PQ_KSUB, cand_mult=_PQ_CMULT,
-                   candidates=cand_ids, cache_key=key)
+    out = S.pq_knn_local(e, _QUERY_VEC_ID, _K, m_sub=_PQ_M,
+                         sub_dim=_PQ_SD, k_sub=_PQ_KSUB,
+                         cand_mult=_PQ_CMULT, nprobe=_IVFPQ_NPROBE,
+                         cache_key=table_key(sf_dir, "embeddings"))
+    if out is None:
+        key = (sf_dir, source_fingerprint(sf_dir, "embeddings"))
+        cents = keyed_persist("ivf_centroids", key,
+                              lambda: S.label_centroids(e))
+        assigned = keyed_persist("ivf_assigned", key,
+                                 lambda: S.ivf_assign(e, cents))
+        q = e.where(F.col("vec_id") == _QUERY_VEC_ID).select(
+            F.col("embedding").alias("__qvec"))
+        probe = (cents.crossJoin(F.broadcast(q))
+                 .select(F.col("label").alias("__plist"),
+                         cosine_similarity("centroid", "__qvec")
+                         .alias("__pc"))
+                 .orderBy(F.desc("__pc"), F.asc("__plist"))
+                 .limit(_IVFPQ_NPROBE)
+                 .select("__plist"))
+        cand_ids = (assigned
+                    .join(F.broadcast(probe),
+                          F.col("list_id") == F.col("__plist"))
+                    .where(F.col("vec_id") != _QUERY_VEC_ID)
+                    .select("vec_id"))
+        out = S.pq_knn(e, _QUERY_VEC_ID, _K, m_sub=_PQ_M, sub_dim=_PQ_SD,
+                       k_sub=_PQ_KSUB, cand_mult=_PQ_CMULT,
+                       candidates=cand_ids, cache_key=key)
     return out.select("vec_id", F.round("cosine", 6).alias("cosine"),
                       F.round("adc", 6).alias("adc_score"))
 

@@ -207,6 +207,12 @@ _CHANGED_THIS_ROUND = frozenset(
         # CC_LOCAL_MAX_EDGES pairs in numpy. Reached, and listed
         # above: dedup_clusters, dedup_transitive_keep and the
         # distributed branch of dedup_phash_clusters.
+        # Driver-sized embedding tables: one Arrow fetch per snapshot
+        # (similarity.vectors_local) feeds numpy branches of
+        # dedup_embedding_cosine, knn_ivf_pq and knn_pq; pq_knn
+        # computes each vector's norm once; the trained codebook
+        # counts its table once. Reached, and listed above:
+        # dedup_embedding_cosine{,_fold}, knn_ivf_pq and knn_pq.
     }
 )
 # r15 window composition: flagship + 34 r14-debt names above + the

@@ -104,6 +104,12 @@ def source_fingerprint(sf_dir: str, *names: str) -> str:
     return h.hexdigest()[:10]
 
 
+def table_key(sf_dir: str, name: str) -> tuple[str, str, str]:
+    """Cache identity (path + content fingerprint) of one testdata
+    table, for persisted-slot reuse and probe-decision caching."""
+    return (sf_dir, name, source_fingerprint(sf_dir, name))
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every testdata table as a temp view so SQL-API entry
     points (SURVEY §3.4) see the same catalog DuckDB's oracle does."""

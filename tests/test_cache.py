@@ -24,6 +24,20 @@ def test_trained_codebook_refits_after_clear_slots(
     assert k2 == k and sorted(cb2.collect()) == sorted(cb.collect())
 
 
+def test_trained_codebook_counts_the_table_once(
+        spark, sf_dir, run_counting_jobs):
+    """A cold fit runs 8 jobs: the parquet schema read, ONE row count
+    (two jobs under AQE) for both k and the sample denominator, and
+    the 2-iteration fit's 5. Counting the table twice made it 10."""
+    from project_2_semantic_similarity_spark.plans.q_dedup import (
+        _trained_codebook)
+
+    cache.clear_slots()
+    _, cold_jobs = run_counting_jobs(
+        "codebook-cold", lambda: _trained_codebook(spark, sf_dir))
+    assert cold_jobs == 8
+
+
 def test_minhash_variant_reprobes_after_clear_slots(
         spark, sf_dir, run_counting_jobs):
     from project_2_semantic_similarity_spark.plans.q_dedup import (

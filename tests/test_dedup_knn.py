@@ -4,6 +4,7 @@ correctness plus recall properties of the probabilistic variants
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from project_2_semantic_similarity_spark.operators import dedup as D
@@ -1427,3 +1428,132 @@ def test_dedup_phash_clusters_gate_paths_equal(spark, sf_dir,
     dist = sorted(map(tuple, fn(spark, sf_dir).collect()))
 
     assert local and local == dist
+
+
+# ------------------------------------- driver-sized vector tables
+
+_VECTOR_QUERIES = ("dedup_embedding_cosine", "knn_ivf_pq", "knn_pq")
+
+
+def _embeddings(spark, sf_dir):
+    from project_2_semantic_similarity_spark.sources import load_table
+
+    return load_table(spark, sf_dir, "embeddings")
+
+
+def _rows_and_schema(spark, name, sf_dir):
+    from project_2_semantic_similarity_spark.plans import registry
+
+    registry.load_all()
+    df = registry.QUERIES[name](spark, sf_dir)
+    return sorted(map(tuple, df.collect())), df.schema
+
+
+@pytest.mark.parametrize("name", _VECTOR_QUERIES)
+def test_vector_queries_local_matches_distributed(spark, sf_dir,
+                                                  monkeypatch, name):
+    """The driver branch (the table is within VEC_LOCAL_MAX_ROWS) and
+    the distributed branch (bound forced to 0) return the same rows
+    and schema."""
+    local = _rows_and_schema(spark, name, sf_dir)
+    monkeypatch.setattr(S, "VEC_LOCAL_MAX_ROWS", 0)
+    assert S.vectors_local(
+        _embeddings(spark, sf_dir), ("t_vec_bound", sf_dir)) is None
+    dist = _rows_and_schema(spark, name, sf_dir)
+    assert local[0] and local == dist
+
+
+def _write_embeddings(path, ids, vecs, labels):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path.mkdir()
+    pq.write_table(pa.table({
+        "vec_id": pa.array(ids, pa.int64()),
+        "embedding": pa.array([list(map(float, v)) for v in vecs],
+                              pa.list_(pa.float32())),
+        "label": pa.array(labels, pa.int32()),
+    }), str(path / "embeddings.parquet"))
+    return str(path)
+
+
+def _edge_tables(tmp_path):
+    """Small tables on the kernels' edges: a zero-norm vector, exact
+    ties (two identical vectors, and copies of the query vector), a
+    label whose centroid is the zero vector, no row with the query id
+    0, a zero-norm query, and no rows at all."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    centers = rng.normal(size=(4, 64))
+    ids = [int(i) for i in rng.permutation(np.arange(1, 61))] + [0]
+    labels = [i % 4 for i in range(len(ids))]
+    vecs = [centers[lbl] + 0.6 * rng.normal(size=64) for lbl in labels]
+    vecs[3] = np.zeros(64)              # zero norm
+    vecs[8] = vecs[7].copy()            # identical pair
+    vecs[20] = vecs[-1].copy()          # copies of the query
+    vecs[33] = vecs[-1].copy()
+    zero_label = labels[:3] + [9] + labels[4:]  # label 9 = {zero}
+    qzero = [np.zeros(64) if i == 0 else v for i, v in zip(ids, vecs)]
+    return {
+        "ties": _write_embeddings(tmp_path / "ties", ids, vecs, labels),
+        "zero_centroid": _write_embeddings(
+            tmp_path / "zc", ids, vecs, zero_label),
+        "no_query": _write_embeddings(
+            tmp_path / "nq", ids[:-1], vecs[:-1], labels[:-1]),
+        "zero_query": _write_embeddings(
+            tmp_path / "zq", ids, qzero, labels),
+        "empty": _write_embeddings(tmp_path / "empty", [], [], []),
+    }
+
+
+def _outcome(spark, name, sf_dir):
+    try:
+        return _rows_and_schema(spark, name, sf_dir)
+    except Exception as exc:  # the branches must fail alike
+        return type(exc)
+
+
+@pytest.mark.parametrize("name", _VECTOR_QUERIES)
+def test_vector_queries_local_matches_distributed_on_edges(
+        spark, tmp_path, monkeypatch, name):
+    tables = _edge_tables(tmp_path)
+    local = {t: _outcome(spark, name, d) for t, d in tables.items()}
+    monkeypatch.setattr(S, "vectors_local", lambda *a, **k: None)
+    dist = {t: _outcome(spark, name, d) for t, d in tables.items()}
+    assert local == dist
+    assert local["ties"][0]  # the edge table is not vacuous
+
+
+def test_vector_queries_share_one_fetch(spark, sf_dir, run_counting_jobs):
+    """After clear_slots(), dedup_embedding_cosine and knn_ivf_pq on
+    one snapshot run one Spark job beyond their two table reads (each
+    parquet read infers its schema in a job): the shared Arrow fetch.
+    Their results are LocalRelations, so collecting runs none."""
+    from project_2_semantic_similarity_spark.operators.cache import (
+        clear_slots)
+    from project_2_semantic_similarity_spark.plans import registry
+
+    registry.load_all()
+    _, reads = run_counting_jobs(
+        "vec-reads", lambda: [_embeddings(spark, sf_dir) for _ in range(2)])
+    clear_slots()
+
+    def both():
+        return [registry.QUERIES[q](spark, sf_dir).collect()
+                for q in ("dedup_embedding_cosine", "knn_ivf_pq")]
+
+    (pairs, knn), jobs = run_counting_jobs("vec-fetch", both)
+    assert pairs and knn
+    assert jobs == reads + 1
+
+
+def test_cosine_pair_bound_falls_back(spark, sf_dir, monkeypatch):
+    """Past COSINE_LOCAL_MAX_PAIRS the driver result is dropped and
+    the distributed pair join answers, with the same rows."""
+    local = _rows_and_schema(spark, "dedup_embedding_cosine", sf_dir)
+    monkeypatch.setattr(S, "COSINE_LOCAL_MAX_PAIRS", 0)
+    e = _embeddings(spark, sf_dir)
+    assert S.cosine_pairs_local(e, 0.45, ("t_pair_bound", sf_dir)) is None
+    dist = _rows_and_schema(spark, "dedup_embedding_cosine", sf_dir)
+    assert local[0] and local == dist

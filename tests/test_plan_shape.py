@@ -11,6 +11,7 @@ import re
 from pyspark.sql import functions as F
 
 import __spark_entry__ as e
+from project_2_semantic_similarity_spark.operators import similarity as S
 
 
 def plan_of(spark, name, sf_dir):
@@ -276,10 +277,11 @@ def test_dedup_clusters_no_cartesian(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_blocked_gemm_is_arrow_map(spark, sf_dir):
+def test_blocked_gemm_is_arrow_map(spark, sf_dir, monkeypatch):
     """The declared dedup_embedding_cosine (gemm engine since r5)
     runs its pair work inside an Arrow mapInPandas over block rows —
     no cartesian, no pair-expanded shuffle."""
+    monkeypatch.setattr(S, "VEC_LOCAL_MAX_ROWS", 0)  # distributed branch
     plan = plan_of(spark, "dedup_embedding_cosine", sf_dir)
     assert "MapInPandas" in plan
     assert "CartesianProduct" not in plan
@@ -422,7 +424,8 @@ def test_sink_zorder_pushes_both_read_filters(spark, sf_dir):
                for ln in scan_lines)
 
 
-def test_knn_pq_plan_shape(spark, sf_dir):
+def test_knn_pq_plan_shape(spark, sf_dir, monkeypatch):
+    monkeypatch.setattr(S, "VEC_LOCAL_MAX_ROWS", 0)  # distributed branch
     plan = plan_of(spark, "knn_pq", sf_dir)
     # encode argmin is a partial-aggregable hash agg, never a window
     # sort over the n x m_sub subvector relation
@@ -434,7 +437,10 @@ def test_knn_pq_plan_shape(spark, sf_dir):
     assert plan.count("TakeOrderedAndProject") >= 2
 
 
-def test_knn_ivf_pq_queries_cached_index(spark, sf_dir):
+def test_knn_ivf_pq_queries_cached_index(spark, sf_dir, monkeypatch):
+    monkeypatch.setattr(S, "VEC_LOCAL_MAX_ROWS", 0)  # distributed branch
+    # pin the warm query: the slots report their size once materialized
+    e.queries()["knn_ivf_pq"](spark, sf_dir).collect()
     plan = plan_of(spark, "knn_ivf_pq", sf_dir)
     # centroid, assignment and code-table slots serve the query from
     # cache — the corpus-sized index build is not in the query plan
@@ -443,6 +449,35 @@ def test_knn_ivf_pq_queries_cached_index(spark, sf_dir):
     # broadcast; nothing shuffles the vector payload
     assert "SortMergeJoin" not in plan
     assert "TakeOrderedAndProject" in plan
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """Every ``lambdafunction(...)`` span of a plan string, each cut
+    at its line's end (the plan string truncates long lines)."""
+    out = []
+    for line in plan.splitlines():
+        start = line.find("lambdafunction(")
+        while start >= 0:
+            depth, i = 0, start + len("lambdafunction")
+            while i < len(line):
+                depth += {"(": 1, ")": -1}.get(line[i], 0)
+                i += 1
+                if depth == 0:
+                    break
+            out.append(line[start:i])
+            start = line.find("lambdafunction(", start + 1)
+    return out
+
+
+def test_knn_pq_norm_is_folded_once_per_vector(spark, sf_dir, monkeypatch):
+    """pq_knn's unit vectors divide by a norm computed outside any
+    lambda: a norm inside transform's lambda is one fold per
+    element."""
+    monkeypatch.setattr(S, "VEC_LOCAL_MAX_ROWS", 0)  # distributed branch
+    plan = plan_of(spark, "knn_pq", sf_dir)
+    bodies = _lambda_bodies(plan)
+    assert bodies
+    assert not [b for b in bodies if "aggregate(" in b]
 
 
 def _single_partition_exchanges_are_metadata_sized(plan: str):

@@ -10,8 +10,9 @@ sweep the brute-force differential oracles (doc-similarity is O(pairs)
 SQL by design) competed with the in-process Spark JVM's heap/page
 cache, inflating VERIFY walls 2.4x over the engine-side sweep and
 making the artifact unreadable as an engine signal. Isolation also
-means an oracle OOM/crash records as that query's "duckdb error"
-instead of killing the sweep. Per-query walls are now recorded SPLIT
+means an oracle OOM/crash records as that query's error (the exit
+code, or the first line naming the exception) instead of killing the
+sweep. Per-query walls are now recorded SPLIT
 (`spark_sec` / `oracle_sec`) so the artifact itself shows which side
 any wall lives on.
 
@@ -44,11 +45,16 @@ sys.path.insert(0, "/root/repo")
 TABLES = ("region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings")
 
-# The oracle process budget: enough for the brute-force O(pairs)
-# doc-similarity CTEs at sf0.1, small enough to leave the Spark JVM's
-# heap and the page cache alone on a 128 GiB box.
-ORACLE_MEMORY = os.environ.get("P2SS_ORACLE_MEM", "32GB")
-ORACLE_THREADS = int(os.environ.get("P2SS_ORACLE_THREADS", "8"))
+# The oracle process budget, by default half of physical RAM and every
+# CPU: a limit above what the box holds gets the process OOM-killed
+# before DuckDB spills, and the other half stays with the Spark JVM
+# and the page cache. P2SS_ORACLE_MEM (a DuckDB size such as "8GB")
+# and P2SS_ORACLE_THREADS override them.
+_PHYS_BYTES = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+ORACLE_MEMORY = (os.environ.get("P2SS_ORACLE_MEM")
+                 or f"{_PHYS_BYTES >> 21}MiB")  # half, in MiB
+ORACLE_THREADS = int(os.environ.get("P2SS_ORACLE_THREADS")
+                     or os.cpu_count() or 1)
 # Per-query ceiling (r13 ADVICE): a hung-but-alive oracle (thrashing
 # under the memory_limit without being OOM-killed) must not stall the
 # sweep — poll with a generous budget, then terminate+restart and
@@ -116,6 +122,15 @@ def frame_fingerprint(df: pd.DataFrame) -> tuple[int, list[str], str]:
     rows.sort()
     h = hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16]
     return len(df), cols, h
+
+
+def error_line(text: str) -> str:
+    """The line of an oracle error that names it: a traceback's first
+    exception line, else the first line of the message."""
+    lines = [ln for ln in text.strip().splitlines() if ln.strip()]
+    named = [ln for ln in lines
+             if not ln.startswith((" ", "Traceback"))]
+    return (named or lines or [text])[0]
 
 
 def _oracle_worker(conn, sf_dir: str) -> None:
@@ -196,8 +211,8 @@ class OracleProc:
             self.conn.send(("run", name, sql))
             got = self._recv(ORACLE_TIMEOUT)
         except (EOFError, BrokenPipeError, OSError):
+            self.proc.join(timeout=5)  # reaped, so exitcode is set
             code = self.proc.exitcode
-            self.proc.join(timeout=5)
             self._start()
             return ("err", f"oracle process died (exitcode={code})")
         if got is None:
@@ -279,9 +294,10 @@ def main() -> int:
         verdict = oracle.run(name, oracles[name])
         t_oracle = time.time() - t1
         if verdict[0] == "err":
-            print(f"FAIL  {name}: duckdb error\n{verdict[1]}")
+            reason = error_line(verdict[1])
+            print(f"FAIL  {name}: duckdb error: {reason}\n{verdict[1]}")
             failed.append(name)
-            records[name] = {"status": "err", "err": "duckdb error",
+            records[name] = {"status": "err", "err": reason,
                              "sec": round(time.time() - t0, 3),
                              "spark_sec": round(t_spark, 3),
                              "oracle_sec": round(t_oracle, 3)}
